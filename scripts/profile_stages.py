@@ -43,7 +43,9 @@ def stage_rows(spark):
         out.append(
             {
                 "id": s.stageId(),
-                "wall_ms": (t1 - t0) if (t0 and t1) else None,
+                "wall_ms": (
+                    (t1 - t0) if t0 is not None and t1 is not None else None
+                ),
                 "tasks": s.numCompleteTasks(),
                 "exec_run_ms": s.executorRunTime(),
                 "exec_cpu_ms": s.executorCpuTime() // 1_000_000,

@@ -644,13 +644,13 @@ def test_fd_check_plan(spark, tmp_path):
 
 
 def test_fd_check_plan_validation():
-    from topnotch_spark.plans.extensions import FdCheckCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     base = {"command": "fdCheck", "input": {"ref": "x", "onDisk": True}}
     with pytest.raises(ValueError, match="non-empty"):
-        FdCheckCmd.from_json(base | {"params": {}})
+        parse_extension(base | {"params": {}})
     with pytest.raises(ValueError, match="determinant"):
-        FdCheckCmd.from_json(base | {"params": {"pairs": [["a"]]}})
+        parse_extension(base | {"params": {"pairs": [["a"]]}})
 
 
 # ---------------------------------------------------------------------------
@@ -997,10 +997,10 @@ def test_cms_join_size_plan(spark, tmp_path):
 
 
 def test_cms_join_size_plan_validation():
-    from topnotch_spark.plans.extensions import CmsCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     with pytest.raises(ValueError, match="joinSize"):
-        CmsCmd.from_json(
+        parse_extension(
             {
                 "command": "cms",
                 "input": {"ref": "x.parquet", "onDisk": True},
@@ -1748,10 +1748,10 @@ def test_nb_plan(spark, tmp_path):
 
 
 def test_nb_plan_requires_label():
-    from topnotch_spark.plans.extensions import TextCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     with pytest.raises(ValueError, match="labelColumn"):
-        TextCmd.from_json(
+        parse_extension(
             {
                 "command": "text",
                 "input": {"ref": "x.parquet", "onDisk": True},
@@ -1900,7 +1900,7 @@ class TestStupidBackoff:
 
 
 def test_stupid_backoff_plan_validation():
-    from topnotch_spark.plans.extensions import LmScoreCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     base = {
         "command": "lmScore",
@@ -1908,11 +1908,11 @@ def test_stupid_backoff_plan_validation():
         "reference": {"ref": "r.parquet", "onDisk": True},
     }
     with pytest.raises(ValueError, match="unknown method"):
-        LmScoreCmd.from_json(
+        parse_extension(
             base | {"params": {"idColumn": "id", "method": "katz"}}
         )
     with pytest.raises(ValueError, match="stupidBackoff takes"):
-        LmScoreCmd.from_json(
+        parse_extension(
             base
             | {
                 "params": {
@@ -1923,7 +1923,7 @@ def test_stupid_backoff_plan_validation():
             }
         )
     with pytest.raises(ValueError, match="addkUnigram takes"):
-        LmScoreCmd.from_json(
+        parse_extension(
             base | {"params": {"idColumn": "id", "alpha": 0.4}}
         )
 
@@ -2098,18 +2098,18 @@ def test_kmv_group_jaccard_plan(spark, tmp_path):
 
 
 def test_kmv_group_jaccard_plan_validation():
-    from topnotch_spark.plans.extensions import QuantileSketchCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     base = {
         "command": "quantileSketch",
         "input": {"ref": "x.parquet", "onDisk": True},
     }
     with pytest.raises(ValueError, match="groupColumn"):
-        QuantileSketchCmd.from_json(
+        parse_extension(
             base | {"params": {"method": "groupJaccard"}}
         )
     with pytest.raises(ValueError, match="valueColumn"):
-        QuantileSketchCmd.from_json(
+        parse_extension(
             base
             | {"params": {"method": "groupJaccard", "groupColumn": "g"}}
         )
@@ -2189,18 +2189,18 @@ def test_t_closeness_plan(spark, tmp_path):
 
 
 def test_t_closeness_plan_param_validation():
-    from topnotch_spark.plans.extensions import KAnonymityCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     base = {
         "command": "kAnonymity",
         "input": {"ref": "x.parquet", "onDisk": True},
     }
     with pytest.raises(ValueError, match="requires"):
-        KAnonymityCmd.from_json(
+        parse_extension(
             base | {"params": {"quasiColumns": ["a"], "t": 0.2}}
         )
     with pytest.raises(ValueError, match="mutually exclusive"):
-        KAnonymityCmd.from_json(
+        parse_extension(
             base
             | {
                 "params": {

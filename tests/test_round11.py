@@ -328,10 +328,10 @@ class TestBpeSegment:
         assert all(r["n_subwords"] >= r["n_tokens"] for r in rows.values())
 
     def test_tokenize_plan_rejects_unigram_options_for_bpe(self):
-        from topnotch_spark.plans.extensions import TokenizeCmd
+        from topnotch_spark.plans.extensions import parse_extension
 
         with pytest.raises(ValueError, match="not valid for method 'bpe'"):
-            TokenizeCmd.from_json(
+            parse_extension(
                 {
                     "command": "tokenize",
                     "input": {"ref": "a", "onDisk": False},
@@ -366,10 +366,10 @@ class TestBpeSegment:
         assert int(m2.group(1)) == len(entry.queries())
 
     def test_tokenize_plan_rejects_unknown_method(self):
-        from topnotch_spark.plans.extensions import TokenizeCmd
+        from topnotch_spark.plans.extensions import parse_extension
 
         with pytest.raises(ValueError, match="unknown method"):
-            TokenizeCmd.from_json(
+            parse_extension(
                 {
                     "command": "tokenize",
                     "input": {"ref": "a", "onDisk": False},
@@ -645,24 +645,19 @@ class TestIncrementalMinhash:
         assert rows[3]["keep"] is True
 
     def test_plan_requires_index_input(self, spark):
-        from topnotch_spark.plans.extensions import DedupCmd
+        from topnotch_spark.plans.extensions import parse_extension
 
-        cmd = DedupCmd.from_json(
-            {
-                "command": "dedup",
-                "input": {"ref": "a", "onDisk": False},
-                "params": {"method": "incrementalMinhash",
-                           "idColumn": "doc_id"},
-                "outputKey": "x",
-            }
-        )
-        engine = type(
-            "E",
-            (),
-            {"spark": spark, "registry": {"a": self._docs(spark)}},
-        )()
+        # the missing "index" input now fails at parse time
         with pytest.raises(ValueError, match='requires an .index. input'):
-            cmd.execute(engine)
+            parse_extension(
+                {
+                    "command": "dedup",
+                    "input": {"ref": "a", "onDisk": False},
+                    "params": {"method": "incrementalMinhash",
+                               "idColumn": "doc_id"},
+                    "outputKey": "x",
+                }
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -1228,10 +1223,10 @@ class TestKmeansExact:
         assert all(r["n_members"] >= 1 for r in rows)
 
     def test_centroids_input_rejected_for_other_methods(self):
-        from topnotch_spark.plans.extensions import SimilarityCmd
+        from topnotch_spark.plans.extensions import parse_extension
 
         with pytest.raises(ValueError, match="only valid for.*silhouette"):
-            SimilarityCmd.from_json(
+            parse_extension(
                 {
                     "command": "similarity",
                     "corpus": {"ref": "a", "onDisk": False},

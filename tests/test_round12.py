@@ -456,34 +456,34 @@ class TestIngestionLifecyclePlan:
         assert abs(rows["bb"]["rows_skew"] - 1 / 1.5) < 1e-6
 
     def test_index_stats_requires_path(self, spark):
-        from topnotch_spark.plans.extensions import IndexCmd
+        from topnotch_spark.plans.extensions import parse_extension
 
         with pytest.raises(ValueError, match="indexPath"):
-            IndexCmd.from_json(
+            parse_extension(
                 {"command": "index",
                  "params": {"method": "stats"},
                  "outputKey": "x"}
             )
 
     def test_index_cmd_validation(self, spark):
-        from topnotch_spark.plans.extensions import IndexCmd
+        from topnotch_spark.plans.extensions import parse_extension
 
         with pytest.raises(ValueError, match="unknown method"):
-            IndexCmd.from_json(
+            parse_extension(
                 {"command": "index",
                  "input": {"ref": "a", "onDisk": False},
                  "params": {"method": "rebuildEverything"},
                  "outputKey": "x"}
             )
         with pytest.raises(ValueError, match="indexPath"):
-            IndexCmd.from_json(
+            parse_extension(
                 {"command": "index",
                  "input": {"ref": "a", "onDisk": False},
                  "params": {"method": "upsertExact"},
                  "outputKey": "x"}
             )
         with pytest.raises(ValueError, match="centroids"):
-            IndexCmd.from_json(
+            parse_extension(
                 {"command": "index",
                  "input": {"ref": "a", "onDisk": False},
                  "params": {"method": "buildSemantic",

@@ -1,5 +1,5 @@
 """Round-7 regression tests: the three ADVICE fixes (curriculum
-keep-rate filter parity, stateful-op dtype normalization, TextCmd
+keep-rate filter parity, stateful-op dtype normalization, text-command
 plan-time validation)."""
 
 from __future__ import annotations
@@ -134,11 +134,11 @@ def test_anomaly_stream_float32_value_column(spark, tmp_path):
     assert any(eid == 16 for eid, _, _ in got)  # the outlier is flagged
 
 
-# ---- TextCmd: plan-time validation ------------------------------------------
+# ---- text command: plan-time validation --------------------------------------
 
 
 def test_text_cmd_missing_required_params_fails_at_parse(spark):
-    from topnotch_spark.plans.extensions import TextCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     def obj(method, **params):
         return {
@@ -149,15 +149,15 @@ def test_text_cmd_missing_required_params_fails_at_parse(spark):
         }
 
     with pytest.raises(ValueError, match="calibrateRanks.*orderCol"):
-        TextCmd.from_json(obj("calibrateRanks", partitionCol="source"))
+        parse_extension(obj("calibrateRanks", partitionCol="source"))
     with pytest.raises(ValueError, match="calibrateRanks.*partitionCol"):
-        TextCmd.from_json(obj("calibrateRanks", orderCol="n_chars"))
+        parse_extension(obj("calibrateRanks", orderCol="n_chars"))
     with pytest.raises(ValueError, match="oovRate.*partitionCol"):
-        TextCmd.from_json(obj("oovRate", textColumn="text"))
+        parse_extension(obj("oovRate", textColumn="text"))
     # well-formed plans still parse
-    cmd = TextCmd.from_json(
+    cmd = parse_extension(
         obj("calibrateRanks", orderCol="n_chars", partitionCol="source")
     )
     assert cmd.method == "calibrateRanks"
-    cmd2 = TextCmd.from_json(obj("oovRate", partitionCol="source"))
+    cmd2 = parse_extension(obj("oovRate", partitionCol="source"))
     assert cmd2.method == "oovRate"

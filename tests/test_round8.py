@@ -55,7 +55,7 @@ def test_bm25_max_token_df_drops_stopword_term(spark):
 
 def test_retrieve_plan_accepts_max_token_df(spark, tmp_path):
     from topnotch_spark.engine import TnEngine
-    from topnotch_spark.plans.extensions import RetrieveCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     obj = {
         "command": "retrieve",
@@ -64,7 +64,7 @@ def test_retrieve_plan_accepts_max_token_df(spark, tmp_path):
         "params": {"queries": [[1, "spark window agg"]], "k": 5,
                    "maxTokenDf": 400},
     }
-    cmd = RetrieveCmd.from_json(obj)
+    cmd = parse_extension(obj)
     assert cmd.options == {"k": 5, "max_token_df": 400}
 
     plan = tmp_path / "retrieve_valve.json"
@@ -441,10 +441,10 @@ def test_rrf_fuse_matches_hand_computation(spark):
 
 def test_fuse_plan_command(spark, tmp_path):
     from topnotch_spark.engine import TnEngine
-    from topnotch_spark.plans.extensions import FuseCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     with pytest.raises(ValueError, match="at least 2"):
-        FuseCmd.from_json(
+        parse_extension(
             {"command": "fuse", "runs": [{"ref": "a", "onDisk": False}],
              "outputKey": "o", "params": {}}
         )
@@ -483,12 +483,7 @@ def test_fuse_plan_command(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_method_param_validated_at_parse_time():
-    from topnotch_spark.plans.extensions import (
-        DedupCmd,
-        MembershipCmd,
-        SimilarityCmd,
-        TextCmd,
-    )
+    from topnotch_spark.plans.extensions import parse_extension
 
     inp = {"ref": "x", "onDisk": False}
 
@@ -497,24 +492,24 @@ def test_method_param_validated_at_parse_time():
                 "params": {"idColumn": "id", **params}}
 
     with pytest.raises(ValueError, match="dedup: params.method is required"):
-        DedupCmd.from_json(dedup_obj({}))
+        parse_extension(dedup_obj({}))
     with pytest.raises(ValueError, match="dedup: unknown method 'minhashx'"):
-        DedupCmd.from_json(dedup_obj({"method": "minhashx"}))
+        parse_extension(dedup_obj({"method": "minhashx"}))
     with pytest.raises(ValueError, match="text: params.method is required"):
-        TextCmd.from_json({"command": "text", "input": inp, "outputKey": "o",
+        parse_extension({"command": "text", "input": inp, "outputKey": "o",
                            "params": {"idColumn": "id"}})
     with pytest.raises(ValueError, match="similarity: unknown method"):
-        SimilarityCmd.from_json(
+        parse_extension(
             {"command": "similarity", "corpus": inp, "queries": inp,
              "outputKey": "o", "params": {"method": "ivfx"}}
         )
     with pytest.raises(ValueError, match="bloom: params.method is required"):
-        MembershipCmd.from_json(
+        parse_extension(
             {"command": "bloom", "input": inp, "outputKey": "o",
              "params": {"keyColumn": "k"}}
         )
     # well-formed commands still parse
-    assert DedupCmd.from_json(dedup_obj({"method": "phash"})).method == "phash"
+    assert parse_extension(dedup_obj({"method": "phash"})).method == "phash"
 
 
 # ---------------------------------------------------------------------------
@@ -593,10 +588,10 @@ def test_cms_never_underestimates_and_merges(spark):
 
 def test_cms_plan_command(spark, tmp_path):
     from topnotch_spark.engine import TnEngine
-    from topnotch_spark.plans.extensions import CmsCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     with pytest.raises(ValueError, match="cms: unknown method"):
-        CmsCmd.from_json(
+        parse_extension(
             {"command": "cms", "input": {"ref": "x", "onDisk": False},
              "outputKey": "o", "params": {"method": "probe", "keyColumn": "k"}}
         )

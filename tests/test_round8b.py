@@ -136,7 +136,7 @@ def test_label_knn_agreement_hand_computed(spark):
 
 def test_similarity_plan_label_agreement(spark, tmp_path):
     from topnotch_spark.engine import TnEngine
-    from topnotch_spark.plans.extensions import SimilarityCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     obj = {
         "command": "similarity",
@@ -146,12 +146,12 @@ def test_similarity_plan_label_agreement(spark, tmp_path):
                    "dim": 64, "labelColumn": "label", "minAgree": 0.5},
     }
     # self-join shaped: no 'queries' input needed
-    cmd = SimilarityCmd.from_json(obj)
-    assert cmd.queries is None
+    cmd = parse_extension(obj)
+    assert "queries" not in cmd.slots
 
     # but the search methods still demand one, at parse time
     with pytest.raises(ValueError, match="requires a 'queries'"):
-        SimilarityCmd.from_json({**obj, "params": {"method": "ann"}})
+        parse_extension({**obj, "params": {"method": "ann"}})
 
     plan = tmp_path / "label_noise.json"
     plan.write_text(json.dumps({"commands": [obj]}))
@@ -270,15 +270,15 @@ def test_kmv_accuracy_within_bound_on_uniform(spark):
 
 def test_quantile_sketch_plan_command(spark, tmp_path):
     from topnotch_spark.engine import TnEngine
-    from topnotch_spark.plans.extensions import QuantileSketchCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     with pytest.raises(ValueError, match='requires a "parts"'):
-        QuantileSketchCmd.from_json(
+        parse_extension(
             {"command": "quantileSketch", "outputKey": "m",
              "params": {"method": "merge"}}
         )
     with pytest.raises(ValueError, match='requires an "input"'):
-        QuantileSketchCmd.from_json(
+        parse_extension(
             {"command": "quantileSketch", "outputKey": "b",
              "params": {"method": "build"}}
         )
@@ -466,10 +466,10 @@ def test_cluster_safe_split_keeps_near_dups_together(spark):
 
 def test_split_plan_cluster_safe_form(spark, tmp_path):
     from topnotch_spark.engine import TnEngine
-    from topnotch_spark.plans.extensions import SplitCmd
+    from topnotch_spark.plans.extensions import parse_extension
 
     with pytest.raises(ValueError, match='requires "textColumn"'):
-        SplitCmd.from_json(
+        parse_extension(
             {"command": "split",
              "input": {"ref": "x", "onDisk": False}, "outputKey": "s",
              "params": {"idColumn": "doc_id", "clusterSafe": True,

@@ -51,8 +51,11 @@ def _install_zipimport_cache_guard() -> None:
     pays back on every subsequent task the worker serves.
     """
     import os
+    import sys
     import zipimport
 
+    if sys.version_info >= (3, 12):  # upstream already keys on stat
+        return
     orig = zipimport.zipimporter.invalidate_caches
     if getattr(orig, "_tn_stat_guard", False):  # idempotent
         return
@@ -66,7 +69,10 @@ def _install_zipimport_cache_guard() -> None:
         if getattr(self, "_tn_zipdir_key", None) == key:
             return
         orig(self)
-        self._tn_zipdir_key = key
+        # a failed read drops the archive from the directory cache (and
+        # leaves _files == {}); only a good read may skip the next probe
+        if self.archive in zipimport._zip_directory_cache:
+            self._tn_zipdir_key = key
 
     invalidate_caches._tn_stat_guard = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches

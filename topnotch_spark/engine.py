@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from topnotch_spark.operators.assertions import run_assertions
 from topnotch_spark.operators.diff import create_diff
 from topnotch_spark.operators.view import create_view
+from topnotch_spark.plans.extensions import ExtensionCmd
 from topnotch_spark.plans.model import (
     AssertionCmd,
     Command,
@@ -155,11 +156,8 @@ class TnEngine:
             df = create_view(self.spark, inputs, cmd.params)
             self._store(df, cmd)
             return NO_FAILURES
-        # extension commands implement .execute(engine) (duck-typed)
-        execute = getattr(cmd, "execute", None)
-        if execute is not None:
-            df = execute(self)
-            self._store(df, cmd)
+        if isinstance(cmd, ExtensionCmd):
+            self._store(cmd.execute(self), cmd)
             return NO_FAILURES
         raise TypeError(f"Unknown command type: {type(cmd).__name__}")
 

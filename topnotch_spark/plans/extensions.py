@@ -1,4 +1,4 @@
-"""Extension plan commands: dedup / text / similarity / asof as
+"""Extension plan commands: dedup / text / similarity / asof / ... as
 first-class command types in the same JSON plan envelope the reference
 defines (SURVEY.md §7E — "new command types in the same plan JSON").
 
@@ -16,3272 +16,952 @@ A user plan mixes them freely with assertion/diff/view:
        "outputKey": "dupCheck"}
     ]}
 
-Each command implements ``execute(engine) -> DataFrame`` (duck-typed
-hook in engine.run_command) and registers itself in
-``parser.EXTENSION_COMMANDS`` when this module loads.
+Every extension command is one row of ``TABLE``, keyed by
+``(command, method)``. A row names the operator function and says how the
+plan feeds it:
+
+- ``slots``: the command's top-level input keys (``input``, ``left``
+  ``right``, ``runs``, ...). They bind, in order, to the function's
+  DataFrame parameters; an input the function defaults is optional.
+- ``params``: the ``params`` keys passed, in order, to the function's
+  other leading parameters. ``key=default`` supplies the value when the
+  plan omits the key; ``-key`` is accepted and not passed.
+- every other ``params`` key is the camelCase spelling of one of the
+  function's remaining keyword parameters (``numHashes`` ->
+  ``num_hashes``).
+
+So a command's accepted params are its row plus the signature of the
+function the row names. ``parse_extension`` checks every key of a plan
+command against both, and raises ValueError on an unknown, missing or
+misspelled one; the parser turns that into an ErrorCmd.
+
+Commands without a ``method`` param pick their row by which key is
+present (``PICK``). A function named without a module is an adapter in
+this file, for the forms a row alone cannot express.
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
+import inspect
+import json
+import re
+from collections import namedtuple
 from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import DataFrame
 
-from topnotch_spark.plans.model import Command
+from topnotch_spark.plans.model import ENVELOPE_KEYS, Command
 from topnotch_spark.sources.inputs import Input, load_input
 
 
-def _require_method(params: dict, known: tuple[str, ...], cmd: str) -> None:
-    """Plan-parse-time method validation: a params dict missing 'method'
-    (or naming an unknown one) raises a uniform ValueError instead of a
-    bare KeyError from deep inside execute()."""
-    method = params.get("method")
-    if method is None:
-        raise ValueError(f"{cmd}: params.method is required")
-    if method not in known:
+@dataclass(frozen=True)
+class ExtensionCmd(Command):
+    """A parsed extension command: the call of one operator function.
+
+    ``slots`` and ``args`` map the function's parameter names to the
+    plan's inputs and leading params; ``options`` holds the remaining
+    snake_case keyword arguments."""
+
+    command: str = ""
+    method: str | None = None
+    target: str = ""
+    slots: dict = field(default_factory=dict)
+    args: dict = field(default_factory=dict)
+    options: dict = field(default_factory=dict)
+
+    @property
+    def inputs(self) -> list[Input]:
+        return list(_flat_inputs(tuple(self.slots.values())))
+
+    @property
+    def writes(self) -> tuple[str, ...]:
+        index_path = self.args.get("index_path")
+        return super().writes + ((index_path,) if index_path else ())
+
+    def execute(self, engine) -> DataFrame:
+        fn, _, _, context = _signature(self.target)
+        env = {"spark": engine.spark, "output_key": self.output_key}
+        frames = {k: _load(engine, v) for k, v in self.slots.items()}
+        return fn(
+            **{k: env[k] for k in context}, **frames, **self.args,
+            **self.options,
+        )
+
+
+def _flat_inputs(value):
+    if isinstance(value, Input):
+        yield value
+    elif isinstance(value, tuple):
+        for v in value:
+            yield from _flat_inputs(v)
+
+
+def _load(engine, value):
+    if isinstance(value, Input):
+        return load_input(engine.spark, value, engine.registry)
+    if isinstance(value, tuple):
+        return [_load(engine, v) for v in value]
+    return value
+
+
+# ---------------------------------------------------------------------------
+# Parse-time checks a signature cannot express
+# ---------------------------------------------------------------------------
+
+def _value_or_text(args: dict) -> None:
+    if "value_column" not in args and "text_column" not in args:
         raise ValueError(
-            f"{cmd}: unknown method {method!r} (known: {', '.join(known)})"
+            'quantileSketch: method "groupJaccard" requires "valueColumn" '
+            'or "textColumn"'
         )
 
 
-def _opt(params: dict, *names: str) -> dict[str, Any]:
-    """Pick camelCase JSON options into snake_case kwargs, skipping absents."""
-    out: dict[str, Any] = {}
-    for name in names:
-        snake = "".join(
-            f"_{c.lower()}" if c.isupper() else c for c in name
-        ).lstrip("_")
-        if name in params:
-            out[snake] = params[name]
-    return out
-
-
-@dataclass(frozen=True)
-class DedupCmd(Command):
-    """{"command": "dedup", "params": {"method": exact|fingerprint|minhash|
-    jaccard|containment|simhash|embedding|clusters|lines|spans|fuzzy|
-    phash|audio|video, "idColumn",
-    "textColumn"|"vecColumn"|"binColumn",
-    + method options (numHashes/bands/threshold/shingleN/bits/bandBits/
-    maxHamming/nPlanes/dim/maxShingleDf/roundDigits/sep/maxLineDf/
-    minChars/spanTokens/minOccurrences/hashType/grid)}}.
-
-    ``clusters`` runs the minhash pair stage then connected components
-    (operators/cluster.py) — per-doc (cluster_id, cluster_size, keep).
-    ``lines`` is cross-document line dedup (C4-style boilerplate
-    removal, curation.dedup_lines): rewrites the text column instead of
-    reporting pairs. ``sourceMatrix`` rolls the minhash pair set up to a
-    symmetric source×source near-dup matrix ("sourceColumn" required). ``spans`` reports duplicated token windows
-    (dedup.duplicate_spans, Lee et al. span-granular dedup). ``phash``
-    is perceptual near-dup over image BLOBS (multimodal.phash_near_dups:
-    aHash/dHash via hashType, banded like simhash); ``audio`` is
-    energy-envelope near-dup over audio blobs
-    (multimodal.audio_near_dups, nFrames frames); ``video`` is
-    keyframe-signature near-dup over video blobs
-    (multimodal.video_near_dups, everyN/minMatchFrac) — binColumn
-    names the binary column for all three. ``minhashRecall`` /
-    ``phashRecall`` emit the one-row banding-recall report (found vs
-    exact pairs) for the text and image pipelines respectively —
-    the config-audit rows to gate a full-corpus dedup on.
-    ``incremental`` / ``incrementalMinhash`` / ``incrementalSemantic``
-    screen a new batch against an "index" input (raw snapshot or the
-    prebuilt artifact): exact content-hash membership, near-dup
-    signature-estimated Jaccard, or trained-cluster cosine (the
-    SemDeDup screen — additionally requires a "centroids" input) — the
-    persisted-index ingestion trio (see dedup.upsert_dedup_index /
-    build_minhash_index / build_semantic_index).
-    ``incrementalPhash`` / ``incrementalAudio`` / ``incrementalVideo``
-    (r13) extend the family to MEDIA: screen a blob batch against an
-    "index" input (prebuilt signature index or raw snapshot blobs) via
-    the multimodal dedup_batch_against_{phash,audio,video}_index
-    screens — old blobs are never re-decoded. ``spansRewrite``
-    emits the deduplicated corpus for ``spans``' findings (cut /
-    keep-first, Lee 2022)."""
-
-    input: Input = None  # type: ignore[assignment]
-    index: Input | None = None
-    centroids: Input | None = None
-    method: str = "exact"
-    id_column: str = "id"
-    value_column: str = "text"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return (
-            [self.input]
-            + ([self.index] if self.index is not None else [])
-            + ([self.centroids] if self.centroids is not None else [])
+def _two_columns(args: dict) -> None:
+    if len(args["mi_columns"]) != 2:
+        raise ValueError(
+            "profile: miColumns takes exactly two columns, got "
+            f"{list(args['mi_columns'])}"
         )
 
-    METHODS = (
-        "exact", "fingerprint", "minhash", "jaccard", "containment",
-        "simhash", "embedding", "semantic", "clusters", "lines", "spans",
-        "spansRewrite", "fuzzy", "phash", "audio", "video", "incremental",
-        "incrementalMinhash", "incrementalSemantic", "incrementalPhash",
-        "incrementalAudio", "incrementalVideo", "sourceMatrix",
-        "minhashRecall", "phashRecall",
+
+def _pairs(args: dict) -> None:
+    if not args["pairs"]:
+        raise ValueError("fdCheck: params.pairs must be a non-empty list")
+    for pair in args["pairs"]:
+        if len(pair) != 2:
+            raise ValueError(
+                f"fdCheck: each pair must be [determinant, dependent], "
+                f"got {pair!r}"
+            )
+
+
+def _edge_spec(args: dict) -> None:
+    if not (
+        {"src_column", "dst_column"} <= args.keys()
+        or {"basket_column", "item_column"} <= args.keys()
+    ):
+        raise ValueError(
+            "graph: params need srcColumn+dstColumn (edge-list input) "
+            "or basketColumn+itemColumn (co-occurrence edges)"
+        )
+
+
+# ---------------------------------------------------------------------------
+# The command table
+# ---------------------------------------------------------------------------
+
+Row = namedtuple("Row", "target slots params check", defaults=("", None))
+
+_TEXT = "idColumn textColumn=text"
+_VEC = "idColumn vecColumn=text"
+_BIN = "idColumn binColumn=text"
+_SEQ = "keyColumn tsColumn=ts tiebreakColumn=event_id"
+
+TABLE: dict[tuple[str, str | None], Row] = {
+    # dedup: duplicate detection over one input, or a batch screened
+    # against an "index" input (a prebuilt index or the raw snapshot)
+    ("dedup", "exact"): Row("dedup:exact_dedup", "input", _TEXT),
+    ("dedup", "fingerprint"): Row("dedup:fingerprint_dedup", "input", _TEXT),
+    ("dedup", "minhash"): Row("dedup:minhash_lsh_dedup", "input", _TEXT),
+    ("dedup", "jaccard"): Row("dedup:ngram_jaccard_pairs", "input", _TEXT),
+    ("dedup", "containment"): Row("dedup:containment_pairs", "input", _TEXT),
+    ("dedup", "simhash"): Row("dedup:simhash_dedup", "input", _TEXT),
+    ("dedup", "embedding"): Row("dedup:embedding_near_dups", "input", _VEC),
+    ("dedup", "semantic"): Row("semantic_dedup", "input index", _VEC),
+    ("dedup", "clusters"): Row("dup_clusters", "input", _TEXT),
+    ("dedup", "lines"): Row("curation:dedup_lines", "input", _TEXT),
+    ("dedup", "spans"): Row("dedup:duplicate_spans", "input", _TEXT),
+    ("dedup", "spansRewrite"): Row(
+        "dedup:rewrite_duplicate_spans", "input", _TEXT),
+    ("dedup", "fuzzy"): Row("fuzzy:fuzzy_match_pairs", "input", _TEXT),
+    ("dedup", "phash"): Row("multimodal:phash_near_dups", "input", _BIN),
+    ("dedup", "audio"): Row("multimodal:audio_near_dups", "input", _BIN),
+    ("dedup", "video"): Row("multimodal:video_near_dups", "input", _BIN),
+    ("dedup", "sourceMatrix"): Row(
+        "dedup:cross_source_dup_matrix", "input", f"{_TEXT} sourceColumn"),
+    ("dedup", "minhashRecall"): Row("dedup:minhash_recall", "input", _TEXT),
+    ("dedup", "phashRecall"): Row("multimodal:phash_recall", "input", _BIN),
+    ("dedup", "incremental"): Row("screen_exact", "input index", _TEXT),
+    ("dedup", "incrementalMinhash"): Row(
+        "screen_minhash", "input index", _TEXT),
+    ("dedup", "incrementalSemantic"): Row(
+        "screen_semantic", "input index centroids", _VEC),
+    ("dedup", "incrementalPhash"): Row("screen_phash", "input index", _BIN),
+    ("dedup", "incrementalAudio"): Row("screen_audio", "input index", _BIN),
+    ("dedup", "incrementalVideo"): Row("screen_video", "input index", _BIN),
+    # text: per-document and corpus-level text analysis
+    ("text", "tokenStats"): Row("textqc:token_stats", "input", _TEXT),
+    ("text", "quality"): Row("textqc:quality_scores", "input", _TEXT),
+    ("text", "langid"): Row("textqc:language_id", "input", _TEXT),
+    ("text", "fingerprints"): Row("textqc:fingerprints", "input", _TEXT),
+    ("text", "chunk"): Row("chunking:chunk_documents", "input", _TEXT),
+    ("text", "piiScrub"): Row("curation:pii_scrub", "input", _TEXT),
+    ("text", "qualityFilter"): Row("curation:quality_filter", "input", _TEXT),
+    ("text", "vocabTopK"): Row("textqc:vocab_topk", "input", _TEXT),
+    ("text", "packShards"): Row("curation:pack_token_shards", "input", _TEXT),
+    ("text", "repetition"): Row("textqc:repetition_stats", "input", _TEXT),
+    ("text", "tfidfKeywords"): Row("textqc:tfidf_keywords", "input", _TEXT),
+    ("text", "normalize"): Row("curation:normalize_text", "input", _TEXT),
+    ("text", "unigramLogprob"): Row("textqc:unigram_logprob", "input", _TEXT),
+    ("text", "bigramLogprob"): Row("textqc:bigram_logprob", "input", _TEXT),
+    ("text", "gopher"): Row("textqc:gopher_rules", "input", _TEXT),
+    ("text", "tokenEntropy"): Row("textqc:token_entropy", "input", _TEXT),
+    ("text", "readability"): Row("textqc:readability", "input", _TEXT),
+    ("text", "novelty"): Row("textqc:ngram_novelty", "input", _TEXT),
+    ("text", "bpeMerges"): Row("textqc:bpe_top_merges", "input", _TEXT),
+    ("text", "bpeMergeSequence"): Row(
+        "textqc:bpe_merge_sequence", "input", _TEXT),
+    ("text", "collocations"): Row("textqc:collocations", "input", _TEXT),
+    ("text", "unigramLm"): Row("textqc:unigram_lm_vocab", "input", _TEXT),
+    ("text", "wordpieceVocab"): Row("textqc:wordpiece_vocab", "input", _TEXT),
+    ("text", "c4"): Row("textqc:c4_rules", "input", _TEXT),
+    ("text", "heaps"): Row("textqc:heaps_fit", "input", _TEXT),
+    ("text", "classifierScore"): Row(
+        "textqc:linear_classifier_score", "input", f"{_TEXT} weights"),
+    ("text", "langidAccuracy"): Row(
+        "textqc:langid_accuracy", "input", f"{_TEXT} trueCol"),
+    ("text", "oovRate"): Row(
+        "textqc:vocab_oov_rate", "input", f"{_TEXT} partitionCol"),
+    ("text", "bpeFertility"): Row(
+        "textqc:bpe_fertility_by_group", "input", f"{_TEXT} partitionCol"),
+    ("text", "unigramFertility"): Row(
+        "textqc:unigram_fertility_by_group", "input",
+        f"{_TEXT} partitionCol"),
+    ("text", "wordpieceFertility"): Row(
+        "textqc:wordpiece_fertility_by_group", "input",
+        f"{_TEXT} partitionCol"),
+    ("text", "nbClassifier"): Row(
+        "textqc:nb_train_score", "input", f"{_TEXT} labelColumn"),
+    ("text", "calibrateRanks"): Row(
+        "textqc:quality_rank_calibrate", "input",
+        "idColumn orderCol partitionCol"),
+    ("text", "zipf"): Row("textqc:zipf_fit", "input", "-idColumn textColumn=text"),
+    ("text", "vocabCoverage"): Row(
+        "textqc:vocab_coverage", "input", "-idColumn textColumn=text"),
+    ("text", "nbWeights"): Row(
+        "textqc:nb_token_weights", "input",
+        "-idColumn textColumn=text labelColumn"),
+    # similarity: vector search and embedding-space audits over "corpus"
+    ("similarity", "bruteForce"): Row(
+        "similarity:brute_force_topk", "corpus queries", "idColumn vecColumn"),
+    ("similarity", "ann"): Row(
+        "similarity:srp_ann_topk", "corpus queries", "idColumn vecColumn"),
+    ("similarity", "mmr"): Row(
+        "similarity:mmr_rerank", "corpus queries", "idColumn vecColumn"),
+    ("similarity", "contrastive"): Row(
+        "similarity:contrastive_pairs", "corpus queries",
+        "idColumn vecColumn labelColumn"),
+    ("similarity", "labelAgreement"): Row(
+        "similarity:label_knn_agreement", "corpus",
+        "idColumn vecColumn labelColumn"),
+    ("similarity", "silhouette"): Row(
+        "cluster_silhouette", "corpus centroids", "idColumn vecColumn"),
+    ("similarity", "kmeans"): Row(
+        "kmeans_centroids", "corpus", "idColumn vecColumn"),
+    ("similarity", "quantizeRecall"): Row(
+        "similarity:quantize_recall", "corpus", "idColumn vecColumn"),
+    ("similarity", "pqRecall"): Row(
+        "similarity:pq_recall", "corpus", "idColumn vecColumn"),
+    ("similarity", "ivfpqRecall"): Row(
+        "similarity:ivfpq_recall", "corpus", "idColumn vecColumn"),
+    ("similarity", "kcenter"): Row(
+        "similarity:kcenter_select", "corpus", "idColumn vecColumn"),
+    ("similarity", "dimStats"): Row(
+        "similarity:embedding_dim_stats", "corpus", "-idColumn vecColumn"),
+    # retrieval: BM25 top-k, and Reciprocal Rank Fusion of 2+ runs
+    ("retrieve", None): Row(
+        "retrieval:bm25_topk", "input", "queries idColumn textColumn"),
+    ("fuse", None): Row(
+        "retrieval:rrf_fuse", "runs", "queryColumn docColumn rankColumn"),
+    # sketches: Bloom / Count-Min / KMV / HLL
+    ("bloom", "build"): Row("bloom_build", "input", "keyColumn"),
+    ("bloom", "probe"): Row("bloom_probe", "input filter", "keyColumn idColumn"),
+    ("cms", "build"): Row("cms_build", "input", "keyColumn"),
+    ("cms", "query"): Row("cms_query", "input sketch", "keyColumn idColumn"),
+    ("cms", "joinSize"): Row(
+        "cms_join_size", "input right", "keyColumn rightKeyColumn"),
+    ("quantileSketch", "build"): Row(
+        "sketch:kmv_build", "input", "idColumn=id valueColumn=value"),
+    ("quantileSketch", "merge"): Row("sketch:kmv_merge", "parts"),
+    ("quantileSketch", "accuracy"): Row(
+        "sketch:kmv_accuracy", "input", "idColumn=id valueColumn=value"),
+    ("quantileSketch", "groupJaccard"): Row(
+        "kmv_group_jaccard", "input", "groupColumn", _value_or_text),
+    ("sketch", None): Row(
+        "sketch:distinct_rollup", "input",
+        "detailColumns rollupColumns=[] valueColumn"),
+    # graph analytics over an edge list or basket co-occurrence edges
+    ("graph", "pagerank"): Row("pagerank", "input", "", _edge_spec),
+    ("graph", "ppr"): Row("personalized_pagerank", "input", "seeds", _edge_spec),
+    ("graph", "triangles"): Row("triangle_counts", "input", "", _edge_spec),
+    ("graph", "components"): Row("components", "input", "", _edge_spec),
+    ("graph", "labelProp"): Row("label_propagation", "input", "", _edge_spec),
+    ("graph", "kcore"): Row("k_core", "input", "", _edge_spec),
+    # column statistics and distribution drift
+    ("profile", "columns"): Row("profile:profile_columns", "input", "columns"),
+    ("profile", "histogramColumn"): Row(
+        "profile:equidepth_histogram", "input", "histogramColumn"),
+    ("profile", "corrColumns"): Row("profile:corr_matrix", "input", "corrColumns"),
+    ("profile", "miColumns"): Row(
+        "mutual_information", "input", "miColumns", _two_columns),
+    ("outliers", "zscore"): Row(
+        "profile:zscore_outliers", "input", "valueColumn groupColumns"),
+    ("outliers", "mad"): Row(
+        "profile:mad_outliers", "input", "valueColumn groupColumns"),
+    ("pivot", None): Row(
+        "profile:pivot_counts", "input",
+        "groupColumn pivotColumn pivotValues valueColumn"),
+    ("drift", "psi"): Row("drift:histogram_drift", "reference current", "column"),
+    ("drift", "ks"): Row("drift:ks_statistic", "reference current", "column"),
+    ("drift", "wasserstein"): Row(
+        "drift:wasserstein_binned", "reference current", "column"),
+    ("drift", "chi2"): Row("drift:chi2_drift", "reference current", "column"),
+    ("drift", "tokens"): Row(
+        "drift:token_distribution_drift", "reference current", "column"),
+    ("drift", "tokenRankShift"): Row(
+        "drift:token_rank_shift", "reference current", "column"),
+    ("drift", "groupKs"): Row("drift:groupwise_ks", "input", "groupColumn column"),
+    ("drift", "trend"): Row("drift:psi_trend", "input", "tsColumn=ts column"),
+    ("drift", "benford"): Row("drift:benford_first_digit", "input", "column"),
+    # per-key ordered sequences over event streams
+    ("sequence", "throttle"): Row(
+        "temporal:throttle_dedup", "input",
+        "keyColumns tsColumn=ts tiebreakColumn=event_id minGapSeconds"),
+    ("sequence", "transitions"): Row(
+        "temporal:transition_counts", "input", f"{_SEQ} stateColumn"),
+    ("sequence", "likelihood"): Row(
+        "temporal:sequence_likelihood", "input", f"{_SEQ} stateColumn"),
+    ("sequence", "paths"): Row(
+        "temporal:frequent_paths", "input", f"{_SEQ} stateColumn"),
+    ("sequence", "cusum"): Row(
+        "temporal:cusum_changepoints", "input", f"{_SEQ} valueColumn"),
+    ("sequence", "gaps"): Row("temporal:interarrival_stats", "input", _SEQ),
+    ("sequence", "funnel"): Row(
+        "temporal:funnel_stages", "input",
+        "userColumn tsColumn=ts stateColumn stages"),
+    ("sequence", "retention"): Row(
+        "temporal:retention_cohorts", "input", "keyColumn tsColumn=ts"),
+    ("sequence", "rolling"): Row(
+        "temporal:rolling_window_agg", "input",
+        "keyColumn tsColumn=ts valueColumn"),
+    ("sequence", "trend"): Row(
+        "temporal:trend_per_key", "input", "keyColumn tsColumn=ts valueColumn"),
+    ("sequence", "ewma"): Row(
+        "temporal:ewma_per_key", "input",
+        "keyColumn tsColumn=ts valueColumn tiebreakColumn=event_id"),
+    ("sequence", "anomaly"): Row(
+        "temporal:rolling_zscore_anomalies", "input",
+        "keyColumn tsColumn=ts valueColumn tiebreakColumn=event_id"),
+    ("asof", None): Row(
+        "temporal:asof_join", "left right", "on leftTs rightTs rightCols"),
+    ("intervalJoin", None): Row(
+        "temporal:interval_join", "facts ranges",
+        "valueColumn loColumn hiColumn rangeColumns"),
+    ("spatialJoin", None): Row("spatial:within_radius_join", "left right", "radius"),
+    # training-data curation
+    ("corpusStats", "mix"): Row(
+        "curation:source_mix_weights", "input", "groupColumn textColumn=text"),
+    ("corpusStats", "mixturePlan"): Row(
+        "curation:mixture_allocate", "input",
+        "groupColumn textColumn=text targetsMilli budgetTokens"),
+    ("corpusStats", "dedupRate"): Row(
+        "dedup:dedup_rate_by_group", "input", f"{_TEXT} groupColumn"),
+    ("corpusStats", "tokenHistogram"): Row(
+        "textqc:token_length_histogram", "input", "textColumn=text"),
+    ("corpusStats", "vocabOverlap"): Row(
+        "textqc:vocab_overlap", "input", "textColumn=text groupColumn"),
+    ("corpusStats", "diversity"): Row(
+        "curation:corpus_diversity", "input", "groupColumn catColumn"),
+    ("corpusStats", "qualityBands"): Row(
+        "textqc:quality_bands", "input", "idColumn orderColumn partitionCol"),
+    ("sample", "stratColumn"): Row(
+        "curation:stratified_sample", "input", "idColumn stratColumn rates"),
+    ("sample", "weightColumn"): Row(
+        "curation:weighted_sample", "input", "idColumn weightColumn"),
+    ("sample", "n"): Row(
+        "curation:weighted_sample_topn", "input", "idColumn weightColumn n"),
+    ("sample", "budgetTokens"): Row(
+        "curation:sample_to_token_budget", "input",
+        "idColumn textColumn=text groupColumn budgetTokens"),
+    ("sample", "orderColumn"): Row(
+        "curation:curriculum_sample", "input",
+        "idColumn orderColumn partitionColumn"),
+    ("split", "fractions"): Row("curation:hash_split", "input", "idColumn fractions"),
+    ("split", "textColumn"): Row(
+        "curation:split_leakage", "input", "idColumn textColumn fractions"),
+    ("split", "clusterSafe"): Row(
+        "curation:cluster_safe_split", "input",
+        "idColumn textColumn fractions -clusterSafe"),
+    ("winsorize", None): Row(
+        "curation:winsorize", "input", "valueColumn groupColumns"),
+    ("decontaminate", "ngram"): Row(
+        "curation:cross_corpus_overlap", "corpus benchmark", _TEXT),
+    ("decontaminate", "embedding"): Row(
+        "curation:embedding_decontaminate", "corpus benchmark",
+        "idColumn vecColumn=embedding"),
+    ("dsir", None): Row("curation:dsir_weights", "raw target", _TEXT),
+    ("lmScore", "addkUnigram"): Row(
+        "textqc:cross_perplexity", "target reference", _TEXT),
+    ("lmScore", "stupidBackoff"): Row(
+        "textqc:stupid_backoff", "target reference", _TEXT),
+    ("tokenize", "unigram"): Row("textqc:unigram_segment", "input vocab", _TEXT),
+    ("tokenize", "bpe"): Row("textqc:bpe_segment", "input vocab", _TEXT),
+    ("tokenize", "wordpiece"): Row(
+        "textqc:wordpiece_segment", "input vocab", _TEXT),
+    # integrity, privacy and layout audits
+    ("integrity", None): Row("integrity:referential_integrity_suite", "relations"),
+    ("fdCheck", None): Row(
+        "integrity:fd_check", "input", "pairs=[]", _pairs),
+    ("kAnonymity", "k"): Row("integrity:k_anonymity", "input", "quasiColumns"),
+    ("kAnonymity", "sensitiveColumn"): Row(
+        "integrity:l_diversity", "input", "quasiColumns sensitiveColumn"),
+    ("kAnonymity", "t"): Row(
+        "integrity:t_closeness", "input", "quasiColumns sensitiveColumn"),
+    ("skewProfile", "topk"): Row("skew:key_skew_topk", "input", "keys"),
+    ("skewProfile", "saltPlan"): Row("skew:salt_plan", "input", "keys"),
+    ("schemaCheck", None): Row("schema_check", "input", "columns"),
+    ("basket", None): Row(
+        "basket:market_basket_pairs", "input", "basketColumn itemColumn"),
+    # warehouse maintenance
+    ("scd2", None): Row(
+        "scd:scd2_merge", "current updates", "keys tracked effectiveColumn"),
+    ("cdcApply", None): Row(
+        "scd:cdc_apply", "snapshot changes",
+        "keys tsColumn opColumn tiebreakColumn"),
+    ("compact", None): Row("sources.maintenance:compact_table", "", "source dest"),
+    # the persisted dedup-index lifecycle: build -> screen (dedup
+    # incremental*) -> upsert / delete / compact, plus a layout audit
+    ("index", "buildExact"): Row(
+        "dedup:build_dedup_index", "input", "idColumn=id textColumn=text"),
+    ("index", "buildMinhash"): Row(
+        "dedup:build_minhash_index", "input", "idColumn=id textColumn=text"),
+    ("index", "buildSemantic"): Row(
+        "build_semantic_index", "input centroids", "idColumn=id vecColumn=text"),
+    ("index", "buildPhash"): Row(
+        "multimodal:build_phash_index", "input", "idColumn=id textColumn=text"),
+    ("index", "buildAudio"): Row(
+        "multimodal:build_audio_index", "input", "idColumn=id textColumn=text"),
+    ("index", "buildVideo"): Row(
+        "multimodal:build_video_index", "input", "idColumn=id textColumn=text"),
+    ("index", "upsertExact"): Row(
+        "dedup:upsert_dedup_index", "input", "indexPath -idColumn"),
+    ("index", "upsertMinhash"): Row(
+        "dedup:upsert_minhash_index", "input", "indexPath -idColumn"),
+    ("index", "upsertSemantic"): Row(
+        "dedup:upsert_semantic_index", "input centroids", "indexPath -idColumn"),
+    ("index", "upsertBitsig"): Row(
+        "dedup:upsert_bitsig_index", "input", "indexPath -idColumn"),
+    ("index", "upsertVideo"): Row(
+        "dedup:upsert_video_index", "input", "indexPath -idColumn"),
+    ("index", "delete"): Row(
+        "dedup:delete_from_index", "input", "indexPath idColumn=id"),
+    ("index", "compactFiles"): Row("dedup:compact_index", "", "indexPath"),
+    ("index", "stats"): Row("dedup:index_stats", "", "indexPath"),
+}
+
+# Commands without a "method" param: the first key present picks the
+# row; the last entry names the row used when none is.
+PICK = {
+    "profile": ("miColumns", "corrColumns", "histogramColumn", "columns"),
+    "sample": ("budgetTokens", "orderColumn", "n", "weightColumn",
+               "stratColumn"),
+    "split": ("clusterSafe", "textColumn", "fractions"),
+    "kAnonymity": ("t", "sensitiveColumn", "k"),
+}
+# The method a command runs when its plan gives none.
+DEFAULT_METHOD = {
+    "drift": "psi", "outliers": "zscore", "decontaminate": "ngram",
+    "lmScore": "addkUnigram", "tokenize": "unigram", "skewProfile": "topk",
+}
+
+
+# ---------------------------------------------------------------------------
+# Parsing
+# ---------------------------------------------------------------------------
+
+def _snake(name: str) -> str:
+    """camelCase -> snake_case; a run of capitals is one word
+    (targetFileMB -> target_file_mb)."""
+    return re.sub(r"(?<=[a-z0-9])(?=[A-Z])", "_", name).lower()
+
+
+def _camel(name: str) -> str:
+    head, *rest = name.split("_")
+    return head + "".join(w.title() for w in rest)
+
+
+@functools.cache
+def _resolve(target: str):
+    """"module:function" under topnotch_spark (a bare module is one of
+    ``operators``); a bare function is an adapter in this module."""
+    if ":" not in target:
+        return globals()[target]
+    module, name = target.split(":")
+    package = "topnotch_spark" if "." in module else "topnotch_spark.operators"
+    return getattr(importlib.import_module(f"{package}.{module}"), name)
+
+
+@functools.cache
+def _signature(target: str):
+    """(function, DataFrame params, plan-fed params, engine-fed names).
+
+    DataFrame parameters only ever come from input slots; ``spark`` and
+    ``output_key`` come from the engine."""
+    fn = _resolve(target)
+    params = list(inspect.signature(fn).parameters.values())
+    context = tuple(p.name for p in params if p.name in ("spark", "output_key"))
+    frames = [p for p in params if "DataFrame" in str(p.annotation)]
+    plain = [p for p in params if p.name not in context and p not in frames]
+    return fn, frames, plain, context
+
+
+def _pick(command: str, params: dict) -> tuple[str | None, str]:
+    """The row's method and how it was chosen: "method", "key" (a PICK
+    key the plan gave) or "plain"."""
+    if (command, None) in TABLE:
+        return None, "plain"
+    if command in PICK:
+        given = [k for k in PICK[command] if params.get(k) not in (None, False)]
+        return (given[0], "key") if given else (PICK[command][-1], "plain")
+    method = params.pop("method", DEFAULT_METHOD.get(command))
+    if method is None:
+        raise ValueError(f"{command}: params.method is required")
+    if (command, method) not in TABLE:
+        known = [m for c, m in TABLE if c == command]
+        raise ValueError(
+            f"{command}: unknown method {method!r} (unknown {command} "
+            f"method; known: {', '.join(known)})"
+        )
+    return method, "method"
+
+
+def _slot_value(value):
+    """JSON input(s) -> Input / tuple. An integrity relation
+    {"name", "child", "fk", "parent", "pk"} becomes that 5-tuple."""
+    if isinstance(value, list):
+        return tuple(_slot_value(v) for v in value)
+    if "ref" in value:
+        return Input.from_json(value)
+    return tuple(
+        _slot_value(value[k]) if k in ("child", "parent") else value[k]
+        for k in ("name", "child", "fk", "parent", "pk")
     )
 
-    @classmethod
-    def from_json(cls, obj: dict) -> "DedupCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "dedup")
-        if p["method"] == "sourceMatrix" and "sourceColumn" not in p:
-            raise ValueError(
-                'dedup: method "sourceMatrix" requires param "sourceColumn"'
-            )
-        if p["method"] == "incrementalSemantic" and "centroids" not in obj:
-            raise ValueError(
-                'dedup: method "incrementalSemantic" requires a '
-                '"centroids" input (centroid_id, centroid)'
-            )
-        return cls(
-            input=Input.from_json(obj["input"]),
-            index=(
-                Input.from_json(obj["index"]) if "index" in obj else None
-            ),
-            centroids=(
-                Input.from_json(obj["centroids"])
-                if "centroids" in obj
-                else None
-            ),
-            method=p["method"],
-            id_column=p["idColumn"],
-            value_column=p.get(
-                "textColumn", p.get("vecColumn", p.get("binColumn", "text"))
-            ),
-            options=_opt(
-                p, "numHashes", "bands", "threshold", "shingleN", "bits",
-                "bandBits", "maxHamming", "nPlanes", "dim", "maxShingleDf",
-                "roundDigits", "sep", "maxLineDf", "minChars", "spanTokens",
-                "minOccurrences", "nClusters", "maxDistance", "maxKeyDf",
-                "hashType", "grid", "nFrames", "everyN", "minMatchFrac",
-                "sourceColumn", "emitCutRanges",
-            ),
-            **cls._common(obj),
+
+def _leading(row: Row) -> list[str]:
+    """The row's params tokens that are passed: ``key`` or ``key=default``."""
+    return [t for t in row.params.split() if not t.startswith("-")]
+
+
+def row_keys(row: Row) -> tuple[list[str], list[str], list[str]]:
+    """(slot keys, params keys of the row, keyword parameter names) of a
+    table row; a plan may also give each keyword parameter, in camelCase,
+    under ``params``."""
+    _, _, plain, _ = _signature(row.target)
+    tokens = [t.lstrip("-").partition("=")[0] for t in row.params.split()]
+    return row.slots.split(), tokens, [p.name for p in plain[len(_leading(row)):]]
+
+
+def parse_extension(obj: dict) -> ExtensionCmd:
+    """Parse one extension command of a plan against its table row."""
+    command = obj["command"]
+    params = dict(obj.get("params", {}))
+    if "externalParamsFile" in obj:
+        params.pop("path", None)  # where the params file was read from
+    method, form = _pick(command, params)
+    row = TABLE[command, method]
+    _, frames, plain, _ = _signature(row.target)
+    if form == "method":
+        label, where = method, f"for method {method!r}"
+        needs = f"{command} method {method} requires"
+    elif form == "key":
+        label, where = method, f"with {method}: mutually exclusive"
+        needs = f'{command}: "{method}" requires'
+    else:
+        label, where, needs = command, f"for {command}", f"{command} requires"
+    slot_keys, tokens, keywords = row_keys(row)
+
+    stray = sorted(set(obj) - ENVELOPE_KEYS - set(slot_keys))
+    if stray:
+        others = [m for (c, m), r in TABLE.items()
+                  if c == command and stray[0] in r.slots.split()]
+        raise ValueError(
+            f"{command}: key {stray[0]!r} is not valid {where}"
+            + (f" (only valid for: {', '.join(others)})" if others else "")
         )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import dedup as D
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "semantic" and self.index is not None:
-            # trained-clustering SemDeDup: the optional "index" input is
-            # a (centroid_id, centroid) frame — e.g. a similarity
-            # method "kmeans" output read back from the registry
-            cents = load_input(engine.spark, self.index, engine.registry)
-            if not {"centroid_id", "centroid"} <= set(cents.columns):
-                raise ValueError(
-                    'dedup: method "semantic" index input must carry '
-                    "centroid_id/centroid columns (a trained centroids "
-                    "frame, e.g. similarity method 'kmeans' output)"
-                )
-            return D.semantic_dedup(
-                df, self.id_column, self.value_column,
-                centroids=cents, **self.options,
-            )
-        if self.method == "incremental":
-            if self.index is None:
-                raise ValueError(
-                    'dedup: method "incremental" requires an "index" input '
-                    "(the prior snapshot, raw or prebuilt)"
-                )
-            idx = load_input(engine.spark, self.index, engine.registry)
-            # accept either a prebuilt (dup_key, index_id) table — the
-            # persisted artifact of a previous run — or the raw snapshot
-            if not {"dup_key", "index_id"} <= set(idx.columns):
-                idx = D.build_dedup_index(
-                    idx, self.id_column, self.value_column
-                )
-            return D.dedup_against_index(
-                df, idx, self.id_column, self.value_column
-            )
-        if self.method == "incrementalMinhash":
-            if self.index is None:
-                raise ValueError(
-                    'dedup: method "incrementalMinhash" requires an '
-                    '"index" input (the prior snapshot, raw or a '
-                    "prebuilt signature index)"
-                )
-            idx = load_input(engine.spark, self.index, engine.registry)
-            opts = dict(self.options)
-            build_opts = {
-                k: opts[k]
-                for k in ("num_hashes", "bands", "shingle_n")
-                if k in opts
-            }
-            # accept either a prebuilt signature/bucket index — the
-            # persisted artifact of a previous run — or the raw snapshot
-            if not {"index_id", "band_idx", "bucket", "sigs"} <= set(
-                idx.columns
-            ):
-                idx = D.build_minhash_index(
-                    idx, self.id_column, self.value_column, **build_opts
-                )
-            return D.dedup_batch_against_minhash_index(
-                df, idx, self.id_column, self.value_column, **opts
-            )
-        if self.method in (
-            "incrementalPhash", "incrementalAudio", "incrementalVideo"
-        ):
-            # media legs of the incremental family: screen a blob batch
-            # against an "index" input — a prebuilt signature index (the
-            # persisted artifact of a previous run, e.g. an IndexCmd
-            # buildPhash/buildAudio/buildVideo output or the on-disk
-            # upsert layouts read back) or the raw snapshot blobs
-            if self.index is None:
-                raise ValueError(
-                    f'dedup: method "{self.method}" requires an "index" '
-                    "input (the prior snapshot blobs or a prebuilt "
-                    "signature index)"
-                )
-            from topnotch_spark.operators import multimodal as M
-
-            idx = load_input(engine.spark, self.index, engine.registry)
-            opts = dict(self.options)
-            if self.method == "incrementalVideo":
-                build_keys = ("hash_type", "grid", "every_n")
-                prebuilt = {"index_id", "frame_idx", "sh", "n_hashed"}
-                build, screen = (
-                    M.build_video_index,
-                    M.dedup_batch_against_video_index,
-                )
-            elif self.method == "incrementalPhash":
-                build_keys = ("hash_type", "grid", "band_bits")
-                prebuilt = {"index_id", "band_idx", "bucket", "sh"}
-                build, screen = (
-                    M.build_phash_index,
-                    M.dedup_batch_against_phash_index,
-                )
-            else:
-                build_keys = ("n_frames", "band_bits")
-                prebuilt = {"index_id", "band_idx", "bucket", "sh"}
-                build, screen = (
-                    M.build_audio_index,
-                    M.dedup_batch_against_audio_index,
-                )
-            if not prebuilt <= set(idx.columns):
-                idx = build(
-                    idx, self.id_column, self.value_column,
-                    **{k: opts[k] for k in build_keys if k in opts},
-                )
-            return screen(
-                df, idx, self.id_column, self.value_column, **opts
-            )
-        if self.method == "incrementalSemantic":
-            if self.index is None:
-                raise ValueError(
-                    'dedup: method "incrementalSemantic" requires an '
-                    '"index" input (the member table or raw snapshot)'
-                )
-            idx = load_input(engine.spark, self.index, engine.registry)
-            cents = load_input(
-                engine.spark, self.centroids, engine.registry
-            )
-            # accept either a prebuilt member table — the persisted
-            # artifact of a previous run — or the raw snapshot
-            if not {"index_id", "vec", "nrm", "centroid_id"} <= set(
-                idx.columns
-            ):
-                idx = D.build_semantic_index(
-                    idx, None, self.id_column, self.value_column,
-                    centroids=cents,
-                )
-            return D.dedup_batch_against_semantic_index(
-                df, idx, cents, self.id_column, self.value_column,
-                **self.options,
-            )
-        fns = {
-            "exact": D.exact_dedup,
-            "fingerprint": D.fingerprint_dedup,
-            "minhash": D.minhash_lsh_dedup,
-            "jaccard": D.ngram_jaccard_pairs,
-            "containment": D.containment_pairs,
-            "simhash": D.simhash_dedup,
-            "embedding": D.embedding_near_dups,
-            "semantic": D.semantic_dedup,
-            "clusters": self._clusters,
-            "lines": self._lines,
-            "spans": D.duplicate_spans,
-            "spansRewrite": D.rewrite_duplicate_spans,
-            "fuzzy": self._fuzzy,
-            "phash": self._phash,
-            "audio": self._audio,
-            "video": self._video,
-            "sourceMatrix": self._source_matrix,
-            "minhashRecall": D.minhash_recall,
-            "phashRecall": self._phash_recall,
-        }
-        if self.method not in fns:
-            raise ValueError(f"unknown dedup method: {self.method}")
-        return fns[self.method](df, self.id_column, self.value_column, **self.options)
-
-    @staticmethod
-    def _clusters(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.cluster import dup_clusters
-        from topnotch_spark.operators.dedup import minhash_lsh_dedup
-
-        return dup_clusters(minhash_lsh_dedup(df, id_col, text_col, **opts))
-
-    @staticmethod
-    def _lines(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.curation import dedup_lines
-
-        return dedup_lines(df, id_col, text_col, **opts)
-
-    @staticmethod
-    def _fuzzy(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.fuzzy import fuzzy_match_pairs
-
-        return fuzzy_match_pairs(df, id_col, text_col, **opts)
-
-    @staticmethod
-    def _source_matrix(
-        df: DataFrame, id_col: str, text_col: str, **opts
-    ) -> DataFrame:
-        from topnotch_spark.operators.dedup import cross_source_dup_matrix
-
-        return cross_source_dup_matrix(
-            df, id_col, text_col, opts.pop("source_column"), **opts
+    bad = sorted(
+        k for k in params if k not in tokens and not (
+            k[0].islower() and "_" not in k and _snake(k) in keywords
         )
-
-    @staticmethod
-    def _phash(df: DataFrame, id_col: str, bin_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.multimodal import phash_near_dups
-
-        return phash_near_dups(df, id_col, bin_col, **opts)
-
-    @staticmethod
-    def _phash_recall(
-        df: DataFrame, id_col: str, bin_col: str, **opts
-    ) -> DataFrame:
-        from topnotch_spark.operators.multimodal import phash_recall
-
-        return phash_recall(df, id_col, bin_col, **opts)
-
-    @staticmethod
-    def _audio(df: DataFrame, id_col: str, bin_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.multimodal import audio_near_dups
-
-        return audio_near_dups(df, id_col, bin_col, **opts)
-
-    @staticmethod
-    def _video(df: DataFrame, id_col: str, bin_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.multimodal import video_near_dups
-
-        return video_near_dups(df, id_col, bin_col, **opts)
-
-
-@dataclass(frozen=True)
-class TextCmd(Command):
-    """{"command": "text", "params": {"method": tokenStats|quality|langid|
-    fingerprints|chunk|piiScrub|qualityFilter|vocabTopK|packShards|
-    repetition|tfidfKeywords|normalize|tokenEntropy|readability|
-    calibrateRanks|oovRate, "idColumn", "textColumn",
-    ["stopwords"/"size"/"overlap"/"k"/"budget"/"partitionCol"/
-    "shingleN"]}}; calibrateRanks takes {"idColumn", "orderCol",
-    "partitionCol", ["roundDigits"]} — per-source percent_rank quality
-    calibration; oovRate takes {"idColumn", "textColumn",
-    "partitionCol", ["vocabK", "roundDigits"]} — per-group OOV rate
-    against the corpus top-k vocabulary; bpeMerges {["k"]} — round-1
-    BPE pair counts; bpeMergeSequence {["nMerges"]} — the full
-    count→merge→recount trainer loop emitting the realized merge
-    sequence; bpeFertility {"partitionCol", ["nMerges", "roundDigits"]}
-    — train on the whole corpus, report per-group subwords-per-token
-    fit; collocations {["minCount", "k", "roundDigits"]} — top-k PMI
-    adjacent word pairs; classifierScore {"weights", ["biasMilli"]} — integer
-    milli-weight linear classifier logits; unigramLm {["maxWordLen",
-    "maxPieceLen", "seedSize", "vocabSize", "nRounds"]} — the Kudo 2018
-    unigram-LM tokenizer trainer (final ranked piece vocab);
-    unigramFertility {"partitionCol", [same trainer options,
-    "roundDigits"]} — per-group fertility under the trained unigram
-    vocab (the BPE-vs-unigram selection audit next to bpeFertility);
-    wordpieceVocab {["maxPieceLen", "vocabSize", "maxWordLen"]} — the
-    frequency-seeded WordPiece-style piece vocabulary (every char +
-    top-N substrings; feed to tokenize method "wordpiece");
-    wordpieceFertility {"partitionCol", ["maxPieceLen", "vocabSize",
-    "maxWordLen", "roundDigits"]} — per-group fertility under the
-    trained WordPiece vocab (the third column of the
-    tokenizer-selection audit next to bpeFertility/unigramFertility);
-    langidAccuracy {"trueCol", ["roundDigits"]} — per-language
-    precision/recall/f1 of the marker langid vs a trusted label;
-    c4 {["minSentences", "minLineWords"]} — the published C4 cleaning
-    rules (Raffel 2020) as per-doc diagnostics + keep;
-    vocabCoverage {["maxLog2K", "roundDigits"]} — corpus-token coverage
-    of the top-k vocabulary at powers-of-two checkpoints;
-    zipf {["vocabK", "scale", "roundDigits"]} — Zipf rank-frequency
-    least-squares fit over the top-k vocabulary (slope/alpha/r²,
-    exact integer regression sums); heaps {["nCheckpoints", "scale",
-    "roundDigits"]} — Heaps'-law vocabulary-growth fit over id-grid
-    corpus prefixes (beta/K/r²);
-    nbWeights {"labelColumn", ["scale"]} — train multinomial Naive
-    Bayes token milli-nat log-odds from a boolean label (the
-    counts-based trainer whose output feeds classifierScore-style
-    gates); nbClassifier {"labelColumn", ["scale"]} — train AND
-    self-score: per-doc score_milli / prediction / correct, the
-    training-set-accuracy audit."""
-
-    input: Input = None  # type: ignore[assignment]
-    method: str = "tokenStats"
-    id_column: str = "id"
-    text_column: str = "text"
-    options: dict = field(default_factory=dict)
-
-    METHODS = (
-        "tokenStats", "quality", "langid", "fingerprints", "chunk",
-        "piiScrub", "qualityFilter", "vocabTopK", "packShards",
-        "repetition", "tfidfKeywords", "normalize", "unigramLogprob",
-        "bigramLogprob", "gopher", "tokenEntropy", "readability",
-        "calibrateRanks", "oovRate", "novelty", "bpeMerges",
-        "bpeMergeSequence", "bpeFertility", "classifierScore",
-        "collocations", "unigramLm", "unigramFertility", "langidAccuracy",
-        "nbWeights", "nbClassifier", "zipf", "heaps", "c4",
-        "vocabCoverage", "wordpieceVocab", "wordpieceFertility",
     )
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "TextCmd":
-        p = obj["params"]
-        # plan-validation-time (not run-time) checks — the pattern every
-        # other command form follows: a malformed plan fails at parse with
-        # a uniform ValueError, never a KeyError mid-run
-        _require_method(p, cls.METHODS, "text")
-        required = {
-            "calibrateRanks": ("orderCol", "partitionCol"),
-            "oovRate": ("partitionCol",),
-            "bpeFertility": ("partitionCol",),
-            "unigramFertility": ("partitionCol",),
-            "wordpieceFertility": ("partitionCol",),
-            "classifierScore": ("weights",),
-            "langidAccuracy": ("trueCol",),
-            "nbWeights": ("labelColumn",),
-            "nbClassifier": ("labelColumn",),
-        }
-        for name in required.get(p["method"], ()):
-            if name not in p:
-                raise ValueError(
-                    f"text method {p['method']!r} requires param {name!r}"
-                )
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=p["method"],
-            id_column=p["idColumn"],
-            text_column=p.get("textColumn", "text"),
-            options=_opt(
-                p, "stopwords", "size", "overlap", "k", "budget",
-                "partitionCol", "shingleN", "globalOrdering",
-                "minWords", "maxWords", "minMeanLen", "maxMeanLen",
-                "maxSymbolRatio", "maxBulletRatio", "maxEllipsisRatio",
-                "minAlphaRatio", "minStopHits", "orderCol", "roundDigits",
-                "vocabK", "weights", "biasMilli", "nMerges", "minCount",
-                "maxWordLen", "maxPieceLen", "seedSize", "vocabSize",
-                "nRounds", "trueCol", "labelColumn", "scale",
-                "nCheckpoints", "minSentences", "minLineWords", "maxLog2K",
-            ),
-            **cls._common(obj),
+    if bad:
+        accepted = sorted(tokens + [_camel(k) for k in keywords])
+        raise ValueError(
+            f"{command}: {label} does not accept options {bad} (not valid "
+            f"{where}); {label} takes: {', '.join(accepted)}"
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import curation as C
-        from topnotch_spark.operators import textqc as T
-        from topnotch_spark.operators.chunking import chunk_documents
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        fns = {
-            "tokenStats": T.token_stats,
-            "quality": T.quality_scores,
-            "langid": T.language_id,
-            "fingerprints": T.fingerprints,
-            "chunk": chunk_documents,
-            "piiScrub": C.pii_scrub,
-            "qualityFilter": C.quality_filter,
-            "vocabTopK": T.vocab_topk,
-            "packShards": C.pack_token_shards,
-            "repetition": T.repetition_stats,
-            "tfidfKeywords": T.tfidf_keywords,
-            "normalize": C.normalize_text,
-            "unigramLogprob": T.unigram_logprob,
-            "bigramLogprob": T.bigram_logprob,
-            "gopher": T.gopher_rules,
-            "tokenEntropy": T.token_entropy,
-            "readability": T.readability,
-            "novelty": T.ngram_novelty,
-            "bpeMerges": T.bpe_top_merges,
-            "bpeMergeSequence": T.bpe_merge_sequence,
-            "collocations": T.collocations,
-            "unigramLm": T.unigram_lm_vocab,
-            "wordpieceVocab": T.wordpiece_vocab,
-            "c4": T.c4_rules,
-        }
-        if self.method == "calibrateRanks":
-            opts = dict(self.options)
-            return T.quality_rank_calibrate(
-                df,
-                self.id_column,
-                opts.pop("order_col"),
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "classifierScore":
-            opts = dict(self.options)
-            return T.linear_classifier_score(
-                df,
-                self.id_column,
-                self.text_column,
-                {t: int(m) for t, m in dict(opts.pop("weights")).items()},
-                bias_milli=int(opts.pop("bias_milli", 0)),
-            )
-        if self.method == "langidAccuracy":
-            opts = dict(self.options)
-            return T.langid_accuracy(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("true_col"),
-                **opts,
-            )
-        if self.method == "bpeFertility":
-            opts = dict(self.options)
-            return T.bpe_fertility_by_group(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "unigramFertility":
-            opts = dict(self.options)
-            return T.unigram_fertility_by_group(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "wordpieceFertility":
-            opts = dict(self.options)
-            return T.wordpiece_fertility_by_group(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "zipf":
-            return T.zipf_fit(df, self.text_column, **self.options)
-        if self.method == "vocabCoverage":
-            return T.vocab_coverage(df, self.text_column, **self.options)
-        if self.method == "heaps":
-            return T.heaps_fit(
-                df, self.id_column, self.text_column, **self.options
-            )
-        if self.method == "nbWeights":
-            opts = dict(self.options)
-            return T.nb_token_weights(
-                df, self.text_column, opts.pop("label_column"), **opts
-            )
-        if self.method == "nbClassifier":
-            opts = dict(self.options)
-            return T.nb_train_score(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("label_column"),
-                **opts,
-            )
-        if self.method == "oovRate":
-            opts = dict(self.options)
-            return T.vocab_oov_rate(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method not in fns:
-            raise ValueError(f"unknown text method: {self.method}")
-        return fns[self.method](df, self.id_column, self.text_column, **self.options)
-
-
-@dataclass(frozen=True)
-class SimilarityCmd(Command):
-    """{"command": "similarity", "params": {"method": bruteForce|ann|
-    labelAgreement|contrastive, "idColumn", "vecColumn", "k",
-    ["nPlanes", "dim", "roundDigits"]}, "corpus": <input>,
-    "queries": <input>}.
-    labelAgreement is self-join shaped (every corpus row is a query) —
-    it takes "corpus" only plus {"labelColumn", ["minAgree"]} and emits
-    the per-vector kNN label-agreement / suspect screen.
-    contrastive mines top-k same-label positives + hardest different-
-    label negatives per anchor in "queries" ({"labelColumn"} option).
-    silhouette is corpus-only too ({["nCentroids", "roundDigits"]}) —
-    per-cluster simplified silhouette over the seeded IVF index; pass
-    an optional "centroids" input (a centroid_id/centroid frame, e.g.
-    a method-"kmeans" output from the registry) to grade a TRAINED
-    clustering instead.
-    kmeans is corpus-only ({["nCentroids", "nRounds"]}) — engine-exact
-    spherical k-means; emits the trained (centroid_id, centroid,
-    n_members) frame for semantic dedup / silhouette / IVF consumers.
-    quantizeRecall is corpus-only ({["k", "nQueries", "dim",
-    "roundDigits"]}) — recall@k of exact search over int8
-    quantize-dequantized vectors vs the raw doubles.
-    mmr reranks each query's exact top-nCandidates by Maximal Marginal
-    Relevance ({["k", "nCandidates", "lambdaMilli", "dim",
-    "roundDigits"]}) — greedy relevance-vs-redundancy selection in
-    exact integer micro-units.
-    pqRecall is corpus-only ({["dim", "m", "nCodes", "k", "nQueries",
-    "roundDigits"]}) — recall@k of product-quantized ADC search vs the
-    raw doubles (seeded per-subspace codebooks).
-    kcenter is corpus-only ({["k", "dim"]}) — greedy farthest-point
-    coreset selection: k maximally-spread exemplars with the
-    coverage-radius curve.
-    ivfpqRecall is corpus-only ({["dim", "m", "nCodes", "nCentroids",
-    "nProbe", "k", "nQueries", "roundDigits"]}) — the composed
-    FAISS-style IVF-PQ query path graded against exact top-k.
-    dimStats is corpus-only ({["roundDigits"]}) — per-dimension
-    mean/std/zero-fraction health profile of the vector space."""
-
-    corpus: Input = None  # type: ignore[assignment]
-    queries: Input = None  # type: ignore[assignment]
-    centroids: Input | None = None
-    method: str = "bruteForce"
-    id_column: str = "vec_id"
-    vec_column: str = "embedding"
-    options: dict = field(default_factory=dict)
-
-    # parser discovers inputs via `inputs` attribute (duck-typed)
-    @property
-    def inputs(self) -> list[Input]:
-        return [
-            i
-            for i in (self.corpus, self.queries, self.centroids)
-            if i is not None
-        ]
-
-    METHODS = (
-        "bruteForce", "ann", "labelAgreement", "contrastive", "silhouette",
-        "quantizeRecall", "mmr", "pqRecall", "kcenter", "ivfpqRecall",
-        "dimStats", "kmeans",
+    slots = {}
+    for key, frame in zip(slot_keys, frames):
+        value = _slot_value(obj[key]) if key in obj else None
+        many = str(frame.annotation).startswith("list[DataFrame")
+        if many and len(value or ()) < 2:
+            raise ValueError(f'{needs} a "{key}" list of at least 2 inputs')
+        if value is not None:
+            slots[frame.name] = value
+        elif frame.default is inspect.Parameter.empty:
+            article = "an" if key[0] in "aeiou" else "a"
+            what = 'an "input"' if key == "input" else f"{article} {key!r} input"
+            raise ValueError(f"{needs} {what}")
+    args = {}
+    for token, param in zip(_leading(row), plain):
+        key, _, default = token.partition("=")
+        if key in params:
+            args[param.name] = params.pop(key)
+        elif default:
+            args[param.name] = json.loads(default) if default[0] in "[{" else default
+        elif param.default is inspect.Parameter.empty:
+            what = f'"{key}"' if form == "key" else f"param {key!r}"
+            raise ValueError(f"{needs} {what}")
+    # what is left: keyword options, and the row's accepted-unused keys
+    options = {_snake(k): v for k, v in params.items() if k not in tokens}
+    if row.check is not None:
+        row.check({**args, **options})
+    return ExtensionCmd(
+        command=command, method=method, target=row.target, slots=slots,
+        args=args, options=options, **Command._common(obj),
     )
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SimilarityCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "similarity")
-        if (
-            p["method"] not in ("labelAgreement", "silhouette",
-                                "quantizeRecall", "pqRecall", "kcenter",
-                                "ivfpqRecall", "dimStats", "kmeans")
-            and "queries" not in obj
-        ):
-            raise ValueError(
-                f"similarity method {p['method']!r} requires a 'queries' "
-                "input (labelAgreement, silhouette, quantizeRecall and "
-                "pqRecall are corpus-only)"
-            )
-        if "centroids" in obj and p["method"] != "silhouette":
-            raise ValueError(
-                "similarity: a 'centroids' input is only valid for "
-                "method 'silhouette' (trained-clustering grading)"
-            )
-        return cls(
-            corpus=Input.from_json(obj["corpus"]),
-            queries=(
-                Input.from_json(obj["queries"]) if "queries" in obj else None
-            ),
-            centroids=(
-                Input.from_json(obj["centroids"])
-                if "centroids" in obj
-                else None
-            ),
-            method=p["method"],
-            id_column=p.get("idColumn", "vec_id"),
-            vec_column=p.get("vecColumn", "embedding"),
-            options=_opt(
-                p, "k", "nPlanes", "dim", "roundDigits", "labelColumn",
-                "minAgree", "nCentroids", "nQueries", "nCandidates",
-                "lambdaMilli", "m", "nCodes", "nProbe", "nRounds",
-            ),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import similarity as S
-
-        corpus = load_input(engine.spark, self.corpus, engine.registry)
-        if self.method == "quantizeRecall":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_centroids"}
-                & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'quantizeRecall' does not accept "
-                    f"option(s) {bad}; supported: k, nQueries, dim, "
-                    "roundDigits"
-                )
-            return S.quantize_recall(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "dimStats":
-            opts = dict(self.options)
-            bad = sorted(set(opts) - {"round_digits"})
-            if bad:
-                raise ValueError(
-                    "similarity method 'dimStats' does not accept "
-                    f"option(s) {bad}; supported: roundDigits"
-                )
-            return S.embedding_dim_stats(
-                corpus, vec_col=self.vec_column, **opts
-            )
-        if self.method == "ivfpqRecall":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_candidates",
-                 "lambda_milli"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'ivfpqRecall' does not accept "
-                    f"option(s) {bad}; supported: dim, m, nCodes, "
-                    "nCentroids, nProbe, k, nQueries, roundDigits"
-                )
-            return S.ivfpq_recall(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "kmeans":
-            opts = dict(self.options)
-            bad = sorted(set(opts) - {"n_centroids", "n_rounds"})
-            if bad:
-                raise ValueError(
-                    "similarity method 'kmeans' does not accept "
-                    f"option(s) {bad}; supported: nCentroids, nRounds"
-                )
-            cents, _ = S.kmeans_centroids_exact(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-            return cents
-        if self.method == "kcenter":
-            opts = dict(self.options)
-            bad = sorted(set(opts) - {"k", "dim"})
-            if bad:
-                raise ValueError(
-                    "similarity method 'kcenter' does not accept "
-                    f"option(s) {bad}; supported: k, dim"
-                )
-            return S.kcenter_select(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "pqRecall":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_centroids",
-                 "n_candidates", "lambda_milli"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'pqRecall' does not accept "
-                    f"option(s) {bad}; supported: dim, m, nCodes, k, "
-                    "nQueries, roundDigits"
-                )
-            return S.pq_recall(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "silhouette":
-            opts = dict(self.options)
-            opts.pop("dim", None)  # exact cosine path needs no literals
-            bad = sorted(
-                {"k", "n_planes", "label_column", "min_agree"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'silhouette' does not accept "
-                    f"option(s) {bad}; supported: nCentroids, roundDigits"
-                )
-            if self.centroids is not None:
-                cents = load_input(
-                    engine.spark, self.centroids, engine.registry
-                )
-                if not {"centroid_id", "centroid"} <= set(cents.columns):
-                    raise ValueError(
-                        "similarity: silhouette 'centroids' input must "
-                        "carry centroid_id/centroid columns (a trained "
-                        "centroids frame, e.g. method 'kmeans' output)"
-                    )
-                opts["centroids"] = cents
-            return S.cluster_silhouette(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "labelAgreement":
-            opts = dict(self.options)
-            label_col = opts.pop("label_column", "label")
-            return S.label_knn_agreement(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                label_col=label_col, **opts,
-            )
-        queries = load_input(engine.spark, self.queries, engine.registry)
-        if self.method == "mmr":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_centroids",
-                 "n_queries"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'mmr' does not accept option(s) "
-                    f"{bad}; supported: k, nCandidates, lambdaMilli, dim, "
-                    "roundDigits"
-                )
-            return S.mmr_rerank(
-                corpus, queries, id_col=self.id_column,
-                vec_col=self.vec_column, **opts,
-            )
-        if self.method == "contrastive":
-            opts = dict(self.options)
-            opts.pop("dim", None)  # exact scorer needs no plane literals
-            label_col = opts.pop("label_column", "label")
-            return S.contrastive_pairs(
-                corpus, queries, id_col=self.id_column,
-                vec_col=self.vec_column, label_col=label_col, **opts,
-            )
-        fns = {"bruteForce": S.brute_force_topk, "ann": S.srp_ann_topk}
-        if self.method not in fns:
-            raise ValueError(f"unknown similarity method: {self.method}")
-        return fns[self.method](
-            corpus, queries, id_col=self.id_column, vec_col=self.vec_column,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class FuseCmd(Command):
-    """{"command": "fuse", "runs": [<input>, <input>, ...], "params":
-    {["queryColumn", "docColumn", "rankColumn", "k", "topk",
-    "roundDigits"]}} — Reciprocal Rank Fusion of 2+ retrieval runs
-    (retrieval.rrf_fuse): each run input carries
-    (queryColumn, docColumn, rankColumn) rows, e.g. the outputs of
-    ``retrieve`` and ``similarity`` commands read back from the
-    registry; emits the fused (query_id, doc_id, rrf_score, n_runs,
-    rank) top-k."""
-
-    runs: tuple[Input, ...] = ()
-    query_column: str = "query_id"
-    doc_column: str = "doc_id"
-    rank_column: str = "rank"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return list(self.runs)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "FuseCmd":
-        p = obj.get("params", {})
-        runs = tuple(Input.from_json(r) for r in obj.get("runs", ()))
-        if len(runs) < 2:
-            raise ValueError("fuse: at least 2 run inputs are required")
-        return cls(
-            runs=runs,
-            query_column=p.get("queryColumn", "query_id"),
-            doc_column=p.get("docColumn", "doc_id"),
-            rank_column=p.get("rankColumn", "rank"),
-            options=_opt(p, "k", "topk", "roundDigits"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.retrieval import rrf_fuse
-
-        return rrf_fuse(
-            [load_input(engine.spark, r, engine.registry) for r in self.runs],
-            query_col=self.query_column,
-            doc_col=self.doc_column,
-            rank_col=self.rank_column,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class AsofCmd(Command):
-    """{"command": "asof", "left": <input>, "right": <input>,
-    "params": {"on": [...], "leftTs", "rightTs", "rightCols",
-    ["suffix", "toleranceSeconds", "direction": backward|forward|nearest]}}"""
-
-    left: Input = None  # type: ignore[assignment]
-    right: Input = None  # type: ignore[assignment]
-    on: tuple[str, ...] = ()
-    left_ts: str = "ts"
-    right_ts: str = "ts"
-    right_cols: tuple[str, ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.left, self.right]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "AsofCmd":
-        p = obj["params"]
-        return cls(
-            left=Input.from_json(obj["left"]),
-            right=Input.from_json(obj["right"]),
-            on=tuple(p["on"]),
-            left_ts=p["leftTs"],
-            right_ts=p["rightTs"],
-            right_cols=tuple(p["rightCols"]),
-            options=_opt(p, "suffix", "toleranceSeconds", "direction"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.temporal import asof_join
-
-        return asof_join(
-            load_input(engine.spark, self.left, engine.registry),
-            load_input(engine.spark, self.right, engine.registry),
-            on=list(self.on),
-            left_ts=self.left_ts,
-            right_ts=self.right_ts,
-            right_cols=list(self.right_cols),
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class ProfileCmd(Command):
-    """{"command": "profile", "params": {["columns"], ["exact"],
-    ["roundDigits"]}} — single-pass column statistics; or
-    {"params": {"histogramColumn", ["nBuckets", "exact", "roundDigits"]}}
-    — equi-depth histogram of one column; or
-    {"params": {"corrColumns": [...], ["decimals", "roundDigits"]}} —
-    pairwise exact-sum Pearson correlations in one scan; or
-    {"params": {"miColumns": [a, b], ["roundDigits"]}} — mutual
-    information / NMI between two categorical columns."""
-
-    input: Input = None  # type: ignore[assignment]
-    columns: tuple[str, ...] | None = None
-    histogram_column: str | None = None
-    corr_columns: tuple[str, ...] | None = None
-    mi_columns: tuple[str, str] | None = None
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "ProfileCmd":
-        p = obj.get("params", {})
-        corr = tuple(p["corrColumns"]) if "corrColumns" in p else None
-        mi = tuple(p["miColumns"]) if "miColumns" in p else None
-        if mi is not None and len(mi) != 2:
-            raise ValueError(
-                f"profile: miColumns takes exactly two columns, got {list(mi)}"
-            )
-        if mi:
-            # mutual_information() takes roundDigits only — rejecting
-            # 'decimals' here turns an opaque TypeError into a plan error.
-            opts = _opt(p, "roundDigits")
-            if "decimals" in p:
-                raise ValueError(
-                    "profile: 'decimals' is not valid with miColumns "
-                    "(use roundDigits)"
-                )
-        elif corr:
-            opts = _opt(p, "decimals", "roundDigits")
-        else:
-            opts = _opt(p, "exact", "roundDigits", "nBuckets")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            columns=tuple(p["columns"]) if "columns" in p else None,
-            histogram_column=p.get("histogramColumn"),
-            corr_columns=corr,
-            mi_columns=mi,  # type: ignore[arg-type]
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.drift import mutual_information
-        from topnotch_spark.operators.profile import (
-            corr_matrix,
-            equidepth_histogram,
-            profile_columns,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.mi_columns is not None:
-            return mutual_information(df, *self.mi_columns, **self.options)
-        if self.corr_columns is not None:
-            return corr_matrix(df, list(self.corr_columns), **self.options)
-        if self.histogram_column is not None:
-            return equidepth_histogram(df, self.histogram_column, **self.options)
-        cols = list(self.columns) if self.columns is not None else None
-        return profile_columns(df, cols, **self.options)
-
-
-@dataclass(frozen=True)
-class OutliersCmd(Command):
-    """{"command": "outliers", "input": <input>, "params": {"method":
-    zscore|mad, "valueColumn", ["groupColumns", "k", "roundDigits"]}} —
-    mean/stddev z-score flags or robust median/MAD flags (the screen
-    that survives heavy-tailed columns)."""
-
-    input: Input = None  # type: ignore[assignment]
-    method: str = "zscore"
-    value_column: str = "value"
-    group_columns: tuple[str, ...] | None = None
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "OutliersCmd":
-        p = obj["params"]
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=p.get("method", "zscore"),
-            value_column=p["valueColumn"],
-            group_columns=(
-                tuple(p["groupColumns"]) if "groupColumns" in p else None
-            ),
-            options=_opt(p, "k", "roundDigits"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.profile import mad_outliers, zscore_outliers
-
-        fns = {"zscore": zscore_outliers, "mad": mad_outliers}
-        if self.method not in fns:
-            raise ValueError(f"unknown outliers method: {self.method}")
-        return fns[self.method](
-            load_input(engine.spark, self.input, engine.registry),
-            self.value_column,
-            list(self.group_columns) if self.group_columns else None,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class PivotCmd(Command):
-    """{"command": "pivot", "input": <input>, "params": {"groupColumn",
-    "pivotColumn", "pivotValues": [...], ["valueColumn", "roundDigits"]}}
-    — native cross-tab; the explicit value domain keeps it a single
-    aggregation job with a stable schema."""
-
-    input: Input = None  # type: ignore[assignment]
-    group_column: str = ""
-    pivot_column: str = ""
-    pivot_values: tuple[str, ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "PivotCmd":
-        p = obj["params"]
-        return cls(
-            input=Input.from_json(obj["input"]),
-            group_column=p["groupColumn"],
-            pivot_column=p["pivotColumn"],
-            pivot_values=tuple(p["pivotValues"]),
-            options=_opt(p, "valueColumn", "roundDigits"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.profile import pivot_counts
-
-        opts = dict(self.options)
-        if "value_column" in opts:  # JSON valueColumn -> kwarg value_col
-            opts["value_col"] = opts.pop("value_column")
-        return pivot_counts(
-            load_input(engine.spark, self.input, engine.registry),
-            self.group_column,
-            self.pivot_column,
-            list(self.pivot_values),
-            **opts,
-        )
-
-
-@dataclass(frozen=True)
-class DriftCmd(Command):
-    """{"command": "drift", "reference": <input>, "current": <input>,
-    "params": {"column", ["method":
-    psi|ks|wasserstein|chi2|tokens|tokenRankShift],
-    ["nBuckets", "eps", "roundDigits", "bins", "vocabK", "k"]}} —
-    PSI histogram drift (default),
-    two-sample KS (exact, or grid-binned via "bins"), binned
-    1-D Wasserstein / earth-mover distance (integral of the ECDF gap —
-    how much mass moved how far, in column units), chi-square
-    categorical homogeneity, KL/JS token-distribution drift
-    ("column" is then the text column), or tokenRankShift — the top-k
-    tokens that climbed most in frequency rank between the two slices
-    (the drill-down for a tripped tokens monitor) — between two
-    datasets.
-    Group-ranking form: {"command": "drift", "input": <input>,
-    "params": {"method": "groupKs", "column", "groupColumn",
-    ["bins", "roundDigits"]}} — per-group binned KS of each slice vs
-    its complement on one shared grid (drift.groupwise_ks): the
-    which-slice-drifted ranking over ONE dataset.
-    Trend form: {"command": "drift", "input": <input>, "params":
-    {"method": "trend", "column", ["tsColumn", "period", "nBuckets",
-    "eps", "roundDigits"]}} — per-period PSI against the earliest
-    period of ONE dataset (drift.psi_trend).
-    Benford form: {"command": "drift", "input": <input>, "params":
-    {"method": "benford", "column", ["intScale", "roundDigits"]}} —
-    first-significant-digit law audit of ONE dataset's positive
-    numeric column (drift.benford_first_digit)."""
-
-    reference: Input = None  # type: ignore[assignment]
-    current: Input = None  # type: ignore[assignment]
-    column: str = ""
-    method: str = "psi"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.reference, self.current]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "DriftCmd":
-        p = obj["params"]
-        method = p.get("method", "psi")
-        if method == "groupKs":
-            if "groupColumn" not in p:
-                raise ValueError(
-                    "drift method 'groupKs' requires param 'groupColumn'"
-                )
-            inp = Input.from_json(obj["input"])
-            return cls(
-                reference=inp,
-                current=inp,
-                column=p["column"],
-                method=method,
-                options=_opt(p, "groupColumn", "bins", "roundDigits"),
-                **cls._common(obj),
-            )
-        if method in ("trend", "benford"):
-            if "bins" in p:
-                raise ValueError(
-                    f"drift method '{method}' does not accept 'bins' "
-                    "(use nBuckets)"
-                )
-            inp = Input.from_json(obj["input"])
-            return cls(
-                reference=inp,
-                current=inp,
-                column=p["column"],
-                method=method,
-                options=_opt(
-                    p, "tsColumn", "period", "nBuckets", "eps",
-                    "roundDigits", "intScale",
-                ),
-                **cls._common(obj),
-            )
-        return cls(
-            reference=Input.from_json(obj["reference"]),
-            current=Input.from_json(obj["current"]),
-            column=p["column"],
-            method=method,
-            options=_opt(
-                p, "nBuckets", "eps", "roundDigits", "bins", "vocabK", "k"
-            ),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.drift import (
-            chi2_drift,
-            histogram_drift,
-            ks_statistic,
-            token_distribution_drift,
-        )
-
-        ref = load_input(engine.spark, self.reference, engine.registry)
-        cur = load_input(engine.spark, self.current, engine.registry)
-        allowed = {
-            "ks": {"round_digits", "bins"},
-            "wasserstein": {"n_buckets", "round_digits"},
-            "psi": {"n_buckets", "eps", "round_digits"},
-            "chi2": {"round_digits"},
-            "tokens": {"round_digits"},
-            "trend": {"ts_column", "period", "n_buckets", "eps",
-                      "round_digits"},
-            "benford": {"int_scale", "round_digits"},
-            "tokenRankShift": {"vocab_k", "k"},
-            "groupKs": {"group_column", "bins", "round_digits"},
-        }
-        if self.method not in allowed:
-            raise ValueError(f"unknown drift method: {self.method}")
-        stray = set(self.options) - allowed[self.method]
-        if stray:
-            raise ValueError(
-                f"drift method '{self.method}' does not accept options "
-                f"{sorted(stray)}; allowed: {sorted(allowed[self.method])}"
-            )
-        if self.method == "benford":
-            from topnotch_spark.operators.drift import benford_first_digit
-
-            return benford_first_digit(ref, self.column, **self.options)
-        if self.method == "groupKs":
-            from topnotch_spark.operators.drift import groupwise_ks
-
-            opts = dict(self.options)
-            return groupwise_ks(
-                ref, opts.pop("group_column"), self.column, **opts
-            )
-        if self.method == "trend":
-            from topnotch_spark.operators.drift import psi_trend
-
-            opts = dict(self.options)
-            ts_col = opts.pop("ts_column", "ts")
-            return psi_trend(ref, ts_col, self.column, **opts)
-        if self.method == "ks":
-            return ks_statistic(ref, cur, self.column, **self.options)
-        if self.method == "wasserstein":
-            from topnotch_spark.operators.drift import wasserstein_binned
-
-            return wasserstein_binned(ref, cur, self.column, **self.options)
-        if self.method == "chi2":
-            return chi2_drift(ref, cur, self.column, **self.options)
-        if self.method == "tokens":
-            return token_distribution_drift(
-                ref, cur, self.column, **self.options
-            )
-        if self.method == "tokenRankShift":
-            from topnotch_spark.operators.drift import token_rank_shift
-
-            return token_rank_shift(ref, cur, self.column, **self.options)
-        return histogram_drift(ref, cur, self.column, **self.options)
-
-
-@dataclass(frozen=True)
-class DeconCmd(Command):
-    """{"command": "decontaminate", "corpus": <input>, "benchmark":
-    <input>, "params": {"idColumn", "textColumn", ["shingleN",
-    "minCommon", "maxShingleDf"]}} — cross-corpus n-gram overlap.
-    With {"method": "embedding", "idColumn", "vecColumn", ["threshold",
-    "nPlanes", "dim"]} the screen is semantic instead: corpus vectors
-    cosine-near a benchmark item (curation.embedding_decontaminate)."""
-
-    corpus: Input = None  # type: ignore[assignment]
-    benchmark: Input = None  # type: ignore[assignment]
-    method: str = "ngram"
-    id_column: str = "id"
-    text_column: str = "text"
-    vec_column: str = "embedding"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.corpus, self.benchmark]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "DeconCmd":
-        p = obj["params"]
-        method = p.get("method", "ngram")
-        if method == "embedding":
-            opts = _opt(p, "threshold", "nPlanes", "dim", "roundDigits")
-        else:
-            opts = _opt(p, "shingleN", "minCommon", "maxShingleDf")
-        return cls(
-            corpus=Input.from_json(obj["corpus"]),
-            benchmark=Input.from_json(obj["benchmark"]),
-            method=method,
-            id_column=p["idColumn"],
-            text_column=p.get("textColumn", "text"),
-            vec_column=p.get("vecColumn", "embedding"),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import (
-            cross_corpus_overlap,
-            embedding_decontaminate,
-        )
-
-        corpus = load_input(engine.spark, self.corpus, engine.registry)
-        bench = load_input(engine.spark, self.benchmark, engine.registry)
-        if self.method == "embedding":
-            return embedding_decontaminate(
-                corpus, bench, self.id_column, self.vec_column, **self.options
-            )
-        if self.method != "ngram":
-            raise ValueError(f"unknown decontaminate method: {self.method}")
-        return cross_corpus_overlap(
-            corpus, bench, self.id_column, self.text_column, **self.options
-        )
-
-
-@dataclass(frozen=True)
-class DsirCmd(Command):
-    """{"command": "dsir", "raw": <input>, "target": <input>, "params":
-    {"idColumn", ["textColumn", "nBuckets", "kSelect", "smooth",
-    "scale", "salt"]}} — DSIR importance resampling (Xie 2023,
-    curation.dsir_weights): score every raw-corpus doc by the hashed
-    n-gram log-ratio between a target-slice model and the raw model,
-    then deterministic Gumbel-top-k selection; emits per-doc weights +
-    the ``selected`` flag."""
-
-    raw: Input = None  # type: ignore[assignment]
-    target: Input = None  # type: ignore[assignment]
-    id_column: str = "id"
-    text_column: str = "text"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.raw, self.target]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "DsirCmd":
-        p = obj["params"]
-        return cls(
-            raw=Input.from_json(obj["raw"]),
-            target=Input.from_json(obj["target"]),
-            id_column=p["idColumn"],
-            text_column=p.get("textColumn", "text"),
-            options=_opt(p, "nBuckets", "kSelect", "smooth", "scale", "salt"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import dsir_weights
-
-        raw = load_input(engine.spark, self.raw, engine.registry)
-        tgt = load_input(engine.spark, self.target, engine.registry)
-        return dsir_weights(
-            raw, tgt, self.id_column, self.text_column, **self.options
-        )
-
-
-@dataclass(frozen=True)
-class LmScoreCmd(Command):
-    """{"command": "lmScore", "target": <input>, "reference": <input>,
-    "params": {"idColumn", ["method": addkUnigram|stupidBackoff,
-    "textColumn", "k", "alpha", "roundDigits"]}} —
-    cross-corpus LM filter: train on the reference slice, score every
-    target doc. ``addkUnigram`` (default) is the CCNet-style add-k
-    unigram model (textqc.cross_perplexity: n_tokens, n_oov, oov_rate,
-    avg_neg_logprob); ``stupidBackoff`` is the Brants 2007 trigram
-    scorer (textqc.stupid_backoff: per-backoff-level hit counts +
-    avg_neg_logscore — catches word-salad that keeps an in-domain
-    unigram profile). Feed the score into a downstream
-    assertion/qualityFilter gate."""
-
-    target: Input = None  # type: ignore[assignment]
-    reference: Input = None  # type: ignore[assignment]
-    method: str = "addkUnigram"
-    id_column: str = "id"
-    text_column: str = "text"
-    options: dict = field(default_factory=dict)
-
-    METHODS = ("addkUnigram", "stupidBackoff")
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.target, self.reference]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "LmScoreCmd":
-        p = obj["params"]
-        method = p.get("method", "addkUnigram")
-        if method not in cls.METHODS:
-            raise ValueError(
-                f"lmScore: unknown method {method!r} "
-                f"(known: {', '.join(cls.METHODS)})"
-            )
-        if method == "stupidBackoff":
-            if "k" in p:
-                raise ValueError(
-                    'lmScore: "k" is the addkUnigram smoothing param; '
-                    'stupidBackoff takes "alpha"'
-                )
-            opts = _opt(p, "alpha", "roundDigits")
-        else:
-            if "alpha" in p:
-                raise ValueError(
-                    'lmScore: "alpha" is the stupidBackoff penalty; '
-                    'addkUnigram takes "k"'
-                )
-            opts = _opt(p, "k", "roundDigits")
-        return cls(
-            target=Input.from_json(obj["target"]),
-            reference=Input.from_json(obj["reference"]),
-            method=method,
-            id_column=p["idColumn"],
-            text_column=p.get("textColumn", "text"),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.textqc import (
-            cross_perplexity,
-            stupid_backoff,
-        )
-
-        tgt = load_input(engine.spark, self.target, engine.registry)
-        ref = load_input(engine.spark, self.reference, engine.registry)
-        fn = (
-            stupid_backoff
-            if self.method == "stupidBackoff"
-            else cross_perplexity
-        )
-        return fn(tgt, ref, self.id_column, self.text_column, **self.options)
-
-
-@dataclass(frozen=True)
-class TokenizeCmd(Command):
-    """{"command": "tokenize", "input": <target>, "vocab": <input>,
-    "params": {"idColumn", ["method", "textColumn", "maxPieceLen",
-    "maxWordLen", "roundDigits"]}} — apply a TRAINED tokenizer to
-    segment new data: per doc n_tokens/n_subwords/fertility, the
-    deployment step of the tokenizer lifecycle. method "unigram"
-    (default) expects a piece/lp_milli vocabulary (a text.unigramLm
-    output read from the registry or a mounted table) and runs
-    textqc.unigram_segment; method "bpe" expects a merge_rank/lhs/rhs
-    merge list (a text.bpeMergeSequence output) and runs
-    textqc.bpe_segment; method "wordpiece" expects a piece frame (a
-    text.wordpieceVocab output) and runs textqc.wordpiece_segment's
-    greedy longest-match walk. maxPieceLen/maxWordLen apply to unigram
-    and wordpiece (BPE segments every word — the open-vocabulary
-    fallback to characters needs no bounds) and are rejected under
-    method "bpe"."""
-
-    input: Input = None  # type: ignore[assignment]
-    vocab: Input = None  # type: ignore[assignment]
-    method: str = "unigram"
-    id_column: str = "id"
-    text_column: str = "text"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input, self.vocab]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "TokenizeCmd":
-        p = obj["params"]
-        method = p.get("method", "unigram")
-        if method not in ("unigram", "bpe", "wordpiece"):
-            raise ValueError(
-                f"tokenize: unknown method {method!r} "
-                "(expected 'unigram', 'bpe', or 'wordpiece')"
-            )
-        if method == "bpe":
-            bad = {"maxPieceLen", "maxWordLen"} & p.keys()
-            if bad:
-                raise ValueError(
-                    f"tokenize: {sorted(bad)} not valid for method 'bpe'"
-                )
-            opts = _opt(p, "roundDigits")
-        else:
-            opts = _opt(p, "maxPieceLen", "maxWordLen", "roundDigits")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            vocab=Input.from_json(obj["vocab"]),
-            method=method,
-            id_column=p["idColumn"],
-            text_column=p.get("textColumn", "text"),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.textqc import (
-            bpe_segment,
-            unigram_segment,
-            wordpiece_segment,
-        )
-
-        tgt = load_input(engine.spark, self.input, engine.registry)
-        voc = load_input(engine.spark, self.vocab, engine.registry)
-        fn = {
-            "bpe": bpe_segment,
-            "unigram": unigram_segment,
-            "wordpiece": wordpiece_segment,
-        }[self.method]
-        return fn(tgt, voc, self.id_column, self.text_column, **self.options)
-
-
-@dataclass(frozen=True)
-class SampleCmd(Command):
-    """{"command": "sample", "input": <input>, "params": {"idColumn",
-    "stratColumn", "rates": {stratum: rate}, ["defaultRate"]}} —
-    deterministic md5-threshold stratified sampling. Alternative form:
-    {"idColumn", "weightColumn", ["salt"]} — per-row weighted Bernoulli
-    (curation.weighted_sample, keep probability = clamp(weight, 0, 1)).
-    Third form: {"idColumn", "textColumn", "groupColumn",
-    "budgetTokens", ["alpha"]} — mixture sampling to a global token
-    budget (curation.sample_to_token_budget). Fourth form:
-    {"idColumn", "weightColumn", "n", ["salt"]} — exact-n weighted
-    sampling without replacement (curation.weighted_sample_topn,
-    A-Res). Fifth form: {"idColumn", "orderColumn", "partitionColumn",
-    ["nBands", "salt"]} — quality-curriculum banded keep rates
-    (curation.curriculum_sample)."""
-
-    input: Input = None  # type: ignore[assignment]
-    id_column: str = "id"
-    strat_column: str = ""
-    weight_column: str = ""
-    order_column: str = ""
-    text_column: str = "text"
-    budget_tokens: int = 0
-    rates: tuple[tuple[str, float], ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SampleCmd":
-        p = obj["params"]
-        if "budgetTokens" in p:
-            if "weightColumn" in p or "rates" in p:
-                raise ValueError(
-                    "sample: budgetTokens and weightColumn/rates are "
-                    "mutually exclusive"
-                )
-            return cls(
-                input=Input.from_json(obj["input"]),
-                id_column=p["idColumn"],
-                strat_column=p["groupColumn"],
-                text_column=p.get("textColumn", "text"),
-                budget_tokens=int(p["budgetTokens"]),
-                options=_opt(p, "alpha", "roundDigits"),
-                **cls._common(obj),
-            )
-        if "orderColumn" in p:
-            if "weightColumn" in p or "rates" in p:
-                raise ValueError(
-                    "sample: orderColumn (curriculum form) and "
-                    "weightColumn/rates are mutually exclusive"
-                )
-            return cls(
-                input=Input.from_json(obj["input"]),
-                id_column=p["idColumn"],
-                strat_column=p["partitionColumn"],
-                order_column=p["orderColumn"],
-                options=_opt(p, "nBands", "salt"),
-                **cls._common(obj),
-            )
-        if "weightColumn" in p:
-            if "stratColumn" in p or "rates" in p:
-                raise ValueError(
-                    "sample: weightColumn and stratColumn/rates are "
-                    "mutually exclusive"
-                )
-            opts = _opt(p, "salt")
-            if "n" in p:
-                opts["n"] = int(p["n"])
-            return cls(
-                input=Input.from_json(obj["input"]),
-                id_column=p["idColumn"],
-                weight_column=p["weightColumn"],
-                options=opts,
-                **cls._common(obj),
-            )
-        return cls(
-            input=Input.from_json(obj["input"]),
-            id_column=p["idColumn"],
-            strat_column=p["stratColumn"],
-            rates=tuple(sorted(p["rates"].items())),
-            options=_opt(p, "defaultRate"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import (
-            sample_to_token_budget,
-            stratified_sample,
-            weighted_sample,
-            weighted_sample_topn,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.order_column:
-            from topnotch_spark.operators.curation import curriculum_sample
-
-            return curriculum_sample(
-                df, self.id_column, self.order_column, self.strat_column,
-                **self.options,
-            )
-        if self.budget_tokens:
-            return sample_to_token_budget(
-                df, self.id_column, self.text_column, self.strat_column,
-                self.budget_tokens, **self.options,
-            )
-        if self.weight_column:
-            if "n" in self.options:
-                return weighted_sample_topn(
-                    df, self.id_column, self.weight_column, **self.options
-                )
-            return weighted_sample(
-                df, self.id_column, self.weight_column, **self.options
-            )
-        return stratified_sample(
-            df, self.id_column, self.strat_column, dict(self.rates),
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class FdCheckCmd(Command):
-    """{"command": "fdCheck", "input": <input>, "params": {"pairs":
-    [["determinant", "dependent"], ...], ["roundDigits"]}} — functional-
-    dependency audit (integrity.fd_check): one summary row per claimed
-    A → B dependency (n_keys, n_violating, violation_frac, holds) — the
-    denormalization-drift detector next to the integrity command's
-    FK orphan accounting."""
-
-    input: Input = None  # type: ignore[assignment]
-    pairs: tuple[tuple[str, str], ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "FdCheckCmd":
-        p = obj["params"]
-        raw = p.get("pairs")
-        if not raw:
-            raise ValueError('fdCheck: params.pairs must be a non-empty list')
-        pairs = []
-        for pair in raw:
-            if len(pair) != 2:
-                raise ValueError(
-                    f"fdCheck: each pair must be [determinant, dependent], "
-                    f"got {pair!r}"
-                )
-            pairs.append((pair[0], pair[1]))
-        return cls(
-            input=Input.from_json(obj["input"]),
-            pairs=tuple(pairs),
-            options=_opt(p, "roundDigits"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.integrity import fd_check
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        return fd_check(df, list(self.pairs), **self.options)
-
-
-@dataclass(frozen=True)
-class IntegrityCmd(Command):
-    """{"command": "integrity", "relations": [{"name", "child": <input>,
-    "fk": [...], "parent": <input>, "pk": [...]}]} — one summary row per
-    child→parent relation (orphans + NULL-FK accounting)."""
-
-    relations: tuple[tuple[str, Input, tuple[str, ...], Input, tuple[str, ...]], ...] = ()
-
-    @property
-    def inputs(self) -> list[Input]:
-        out: list[Input] = []
-        for _, child, _, parent, _ in self.relations:
-            out.extend([child, parent])
-        return out
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "IntegrityCmd":
-        rels = tuple(
-            (
-                r["name"],
-                Input.from_json(r["child"]),
-                tuple(r["fk"]),
-                Input.from_json(r["parent"]),
-                tuple(r["pk"]),
-            )
-            for r in obj["relations"]
-        )
-        return cls(relations=rels, **cls._common(obj))
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.integrity import referential_integrity_suite
-
-        resolved = [
-            (
-                name,
-                load_input(engine.spark, child, engine.registry),
-                list(fk),
-                load_input(engine.spark, parent, engine.registry),
-                list(pk),
-            )
-            for name, child, fk, parent, pk in self.relations
-        ]
-        return referential_integrity_suite(resolved)
-
-
-@dataclass(frozen=True)
-class SkewCmd(Command):
-    """{"command": "skewProfile", "input": <input>, "params":
-    {"keys": [...], ["method": topk|saltPlan, "k",
-    "targetRowsPerTask", "maxSalt"]}} — ``topk`` (default): the
-    heaviest key values with row share (the pre-join skew diagnostic);
-    ``saltPlan``: per hot key the exact-integer salt factor that splits
-    it to the target task size (the prescription salted_join then
-    applies)."""
-
-    input: Input = None  # type: ignore[assignment]
-    keys: tuple[str, ...] = ()
-    method: str = "topk"
-    options: dict = field(default_factory=dict)
-
-    METHODS = ("topk", "saltPlan")
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SkewCmd":
-        p = obj["params"]
-        method = p.get("method", "topk")
-        if method not in cls.METHODS:
-            raise ValueError(
-                f"skewProfile: unknown method {method!r} "
-                f"(known: {', '.join(cls.METHODS)})"
-            )
-        opts = (
-            _opt(p, "targetRowsPerTask", "maxSalt", "roundDigits")
-            if method == "saltPlan"
-            else _opt(p, "k")
-        )
-        return cls(
-            input=Input.from_json(obj["input"]),
-            keys=tuple(p["keys"]),
-            method=method,
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.skew import key_skew_topk, salt_plan
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "saltPlan":
-            return salt_plan(df, list(self.keys), **self.options)
-        return key_skew_topk(df, list(self.keys), **self.options)
-
-
-@dataclass(frozen=True)
-class SplitCmd(Command):
-    """{"command": "split", "input": <input>, "params": {"idColumn",
-    "fractions": {split: fraction}, ["salt"]}} — deterministic
-    hash-based train/val/test assignment (seedless, growth-stable).
-    Leakage form: add "textColumn" (and optionally "holdoutSplit",
-    "trainSplit", "shingleN", "maxShingleDf") to get the cross-split
-    n-gram contamination report instead (curation.split_leakage).
-    Cluster-safe form: "textColumn" + "clusterSafe": true assigns
-    splits by near-dup CLUSTER (curation.cluster_safe_split; optional
-    "numHashes", "bands", "threshold", "shingleN", "salt") so
-    near-duplicates never straddle a split."""
-
-    input: Input = None  # type: ignore[assignment]
-    id_column: str = "id"
-    text_column: str = ""
-    fractions: tuple[tuple[str, float], ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SplitCmd":
-        p = obj["params"]
-        if p.get("clusterSafe"):
-            if "textColumn" not in p:
-                raise ValueError(
-                    'split: "clusterSafe" requires "textColumn" (the '
-                    "near-dup clustering needs document text)"
-                )
-            opts = _opt(
-                p, "numHashes", "bands", "threshold", "shingleN", "salt",
-            )
-            opts["cluster_safe"] = True
-        elif "textColumn" in p:
-            opts = _opt(
-                p, "holdoutSplit", "trainSplit", "shingleN",
-                "maxShingleDf", "salt",
-            )
-        else:
-            opts = _opt(p, "salt")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            id_column=p["idColumn"],
-            text_column=p.get("textColumn", ""),
-            # insertion order is the split-boundary order, so keep it
-            fractions=tuple(p.get("fractions", {}).items()),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import (
-            cluster_safe_split,
-            hash_split,
-            split_leakage,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.options.get("cluster_safe"):
-            opts = {
-                k: v for k, v in self.options.items() if k != "cluster_safe"
-            }
-            if not self.fractions:
-                raise ValueError("split: fractions must be non-empty")
-            return cluster_safe_split(
-                df,
-                self.id_column,
-                self.text_column,
-                dict(self.fractions),
-                **opts,
-            )
-        if self.text_column:
-            return split_leakage(
-                df,
-                self.id_column,
-                self.text_column,
-                fractions=dict(self.fractions) or None,
-                **self.options,
-            )
-        if not self.fractions:
-            raise ValueError("split: fractions must be non-empty")
-        return hash_split(
-            df, self.id_column, dict(self.fractions), **self.options
-        )
-
-
-@dataclass(frozen=True)
-class SequenceCmd(Command):
-    """{"command": "sequence", "input": <input>, "params": {"method":
-    throttle|transitions|funnel|retention|rolling|trend|ewma|anomaly|gaps|
-    paths, "tsColumn", "tiebreakColumn",
-    throttle: {"keyColumns", "minGapSeconds"},
-    transitions/funnel: {"keyColumn"/"userColumn", "stateColumn",
-    funnel: "stages"}, retention: {"keyColumn"},
-    rolling: {"keyColumn", "valueColumn", ["windowSeconds", "decimals"]},
-    trend: {"keyColumn", "valueColumn", ["decimals"]},
-    ewma: {"keyColumn", "valueColumn", ["terms", "decimals"]},
-    anomaly: {"keyColumn", "valueColumn", ["windowRows", "threshold",
-    "minRows", "decimals"]}, gaps: {"keyColumn"},
-    paths: {"keyColumn", "stateColumn", ["nSteps", "k"]} — top-k
-    frequent n-step state paths (overlapping n-grams of the per-key
-    ordered stream),
-    likelihood: {"keyColumn", "stateColumn", ["k", "roundDigits"]} —
-    per-key sequence likelihood under the corpus's own add-k Markov
-    transition model (the behavioral-anomaly screen),
-    cusum: {"keyColumn", "valueColumn", ["driftK", "thresholdH",
-    "decimals", "roundDigits"]} — per-key two-sided CUSUM mean-shift
-    detection (Page 1954): alarms on sustained small drifts the
-    z-score spike detector cannot see}} —
-    per-key ordered-sequence operators over event streams."""
-
-    input: Input = None  # type: ignore[assignment]
-    method: str = "throttle"
-    params: tuple[tuple[str, Any], ...] = ()
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SequenceCmd":
-        p = dict(obj["params"])
-        method = p.pop("method")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=method,
-            params=tuple(sorted(p.items())),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import temporal as Tm
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        p = dict(self.params)
-        ts = p.get("tsColumn", "ts")
-        # default matches the events-table convention used throughout the
-        # repo (an 'id' default resolved to nothing and failed obscurely)
-        tiebreak = p.get("tiebreakColumn", "event_id")
-        if self.method == "throttle":
-            return Tm.throttle_dedup(
-                df, list(p["keyColumns"]), ts, tiebreak, p["minGapSeconds"]
-            )
-        if self.method == "transitions":
-            return Tm.transition_counts(
-                df, p["keyColumn"], ts, tiebreak, p["stateColumn"]
-            )
-        if self.method == "cusum":
-            kwargs = {}
-            for src, dst in (("driftK", "drift_k"),
-                             ("thresholdH", "threshold_h"),
-                             ("decimals", "decimals"),
-                             ("roundDigits", "round_digits")):
-                if src in p:
-                    kwargs[dst] = p[src]
-            return Tm.cusum_changepoints(
-                df, p["keyColumn"], ts, tiebreak, p["valueColumn"], **kwargs
-            )
-        if self.method == "likelihood":
-            kwargs = {}
-            if "k" in p:
-                kwargs["k"] = p["k"]
-            if "roundDigits" in p:
-                kwargs["round_digits"] = p["roundDigits"]
-            return Tm.sequence_likelihood(
-                df, p["keyColumn"], ts, tiebreak, p["stateColumn"], **kwargs
-            )
-        if self.method == "funnel":
-            return Tm.funnel_stages(
-                df, p["userColumn"], ts, p["stateColumn"], list(p["stages"])
-            )
-        if self.method == "retention":
-            return Tm.retention_cohorts(df, p["keyColumn"], ts)
-        if self.method == "rolling":
-            kwargs = {}
-            if "windowSeconds" in p:
-                kwargs["window_seconds"] = p["windowSeconds"]
-            if "decimals" in p:
-                kwargs["decimals"] = p["decimals"]
-            return Tm.rolling_window_agg(
-                df, p["keyColumn"], ts, p["valueColumn"], **kwargs
-            )
-        if self.method == "trend":
-            kwargs = {}
-            if "decimals" in p:
-                kwargs["decimals"] = p["decimals"]
-            return Tm.trend_per_key(
-                df, p["keyColumn"], ts, p["valueColumn"], **kwargs
-            )
-        if self.method == "ewma":
-            kwargs = _opt(p, "terms", "decimals")
-            return Tm.ewma_per_key(
-                df, p["keyColumn"], ts, p["valueColumn"], tiebreak, **kwargs
-            )
-        if self.method == "anomaly":
-            kwargs = _opt(p, "windowRows", "threshold", "minRows", "decimals")
-            return Tm.rolling_zscore_anomalies(
-                df, p["keyColumn"], ts, p["valueColumn"], tiebreak, **kwargs
-            )
-        if self.method == "gaps":
-            return Tm.interarrival_stats(df, p["keyColumn"], ts, tiebreak)
-        if self.method == "paths":
-            kwargs = _opt(p, "nSteps", "k")
-            return Tm.frequent_paths(
-                df, p["keyColumn"], ts, tiebreak, p["stateColumn"], **kwargs
-            )
-        raise ValueError(f"unknown sequence method: {self.method}")
-
-
-@dataclass(frozen=True)
-class WinsorizeCmd(Command):
-    """{"command": "winsorize", "input": <input>, "params":
-    {"valueColumn", ["groupColumns", "lowerP", "upperP", "exact",
-    "roundDigits"]}} — percentile clipping; exact=false selects the
-    t-digest approx path for scale."""
-
-    input: Input = None  # type: ignore[assignment]
-    value_column: str = ""
-    group_columns: tuple[str, ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "WinsorizeCmd":
-        p = obj["params"]
-        return cls(
-            input=Input.from_json(obj["input"]),
-            value_column=p["valueColumn"],
-            group_columns=tuple(p.get("groupColumns", [])),
-            options=_opt(p, "lowerP", "upperP", "exact", "roundDigits"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import winsorize
-
-        return winsorize(
-            load_input(engine.spark, self.input, engine.registry),
-            self.value_column,
-            list(self.group_columns) or None,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class CorpusStatsCmd(Command):
-    """{"command": "corpusStats", "input": <input>, "params": {"method":
-    mix|mixturePlan|dedupRate|tokenHistogram|qualityBands|vocabOverlap|
-    diversity, per-method columns}} — corpus-level rollups for
-    training-mix planning. diversity takes {"groupColumn", "catColumn"}
-    and emits Shannon/Simpson/Gini indices per group. mixturePlan takes
-    {"groupColumn", "targetsMilli": {source: milli}, "budgetTokens",
-    ["maxRepeatMilli", "textColumn"]} and emits the exact waterfilled
-    token allocation per source (curation.mixture_allocate)."""
-
-    input: Input = None  # type: ignore[assignment]
-    method: str = "mix"
-    params: tuple[tuple[str, Any], ...] = ()
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "CorpusStatsCmd":
-        p = dict(obj["params"])
-        method = p.pop("method")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=method,
-            params=tuple(sorted(p.items())),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import source_mix_weights
-        from topnotch_spark.operators.dedup import dedup_rate_by_group
-        from topnotch_spark.operators.textqc import (
-            quality_bands,
-            token_length_histogram,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        p = dict(self.params)
-        text = p.get("textColumn", "text")
-        if self.method == "mix":
-            return source_mix_weights(
-                df, p["groupColumn"], text, alpha=p.get("alpha", 0.5)
-            )
-        if self.method == "mixturePlan":
-            from topnotch_spark.operators.curation import mixture_allocate
-
-            for req in ("groupColumn", "targetsMilli", "budgetTokens"):
-                if req not in p:
-                    raise ValueError(
-                        f"corpusStats mixturePlan requires param {req!r}"
-                    )
-            return mixture_allocate(
-                df,
-                p["groupColumn"],
-                text,
-                {s: int(m) for s, m in dict(p["targetsMilli"]).items()},
-                int(p["budgetTokens"]),
-                max_repeat_milli=int(p.get("maxRepeatMilli", 1000)),
-                round_digits=p.get("roundDigits", 6),
-            )
-        if self.method == "dedupRate":
-            return dedup_rate_by_group(
-                df, p["idColumn"], text, p["groupColumn"]
-            )
-        if self.method == "tokenHistogram":
-            return token_length_histogram(df, text)
-        if self.method == "vocabOverlap":
-            from topnotch_spark.operators.textqc import vocab_overlap
-
-            return vocab_overlap(df, text, p["groupColumn"])
-        if self.method == "diversity":
-            from topnotch_spark.operators.curation import corpus_diversity
-
-            return corpus_diversity(
-                df, p["groupColumn"], p["catColumn"],
-                round_digits=p.get("roundDigits", 6),
-            )
-        if self.method == "qualityBands":
-            return quality_bands(
-                df,
-                p["idColumn"],
-                p["orderColumn"],
-                p.get("partitionCol"),
-                p.get("nBands", 4),
-                global_ordering=bool(p.get("globalOrdering", False)),
-            )
-        raise ValueError(f"unknown corpusStats method: {self.method}")
-
-
-@dataclass(frozen=True)
-class CmsCmd(Command):
-    """{"command": "cms", "input": <input>, "params": {"method":
-    build|query|joinSize, "keyColumn", ["idColumn", "width", "depth",
-    "rightKeyColumn", "roundDigits"]},
-    ["sketch": <input>], ["right": <input>]} — mergeable Count-Min
-    frequency sketch
-    (operators/sketch.cms_build/cms_query). ``build`` emits the
-    (row_idx, col_idx, cnt) cell table (persist it via outputs; merge
-    batches by summing cells); ``query`` probes the broadcast
-    ``sketch`` input and emits (id, est_count) — never underestimates.
-    ``joinSize`` estimates |input ⋈ right| on keyColumn =
-    rightKeyColumn from both sides' sketches (the AMS inner-product
-    estimator, sketch.cms_join_size) and grades it against the exact
-    per-key counts join.
-    NULL keys hash as empty strings, like the bloom command."""
-
-    input: Input = None  # type: ignore[assignment]
-    sketch_input: Input | None = None
-    right_input: Input | None = None
-    method: str = "build"
-    key_column: str = "key"
-    right_key_column: str | None = None
-    id_column: str = "id"
-    options: dict = field(default_factory=dict)
-
-    METHODS = ("build", "query", "joinSize")
-
-    @property
-    def inputs(self) -> list[Input]:
-        return (
-            [self.input]
-            + ([self.sketch_input] if self.sketch_input is not None else [])
-            + ([self.right_input] if self.right_input is not None else [])
-        )
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "CmsCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "cms")
-        if p["method"] == "joinSize":
-            if "right" not in obj or "rightKeyColumn" not in p:
-                raise ValueError(
-                    'cms: method "joinSize" requires a "right" input and '
-                    'param "rightKeyColumn"'
-                )
-            opts = _opt(p, "width", "depth", "roundDigits")
-        else:
-            opts = _opt(p, "width", "depth")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            sketch_input=(
-                Input.from_json(obj["sketch"]) if "sketch" in obj else None
-            ),
-            right_input=(
-                Input.from_json(obj["right"]) if "right" in obj else None
-            ),
-            method=p["method"],
-            key_column=p["keyColumn"],
-            right_key_column=p.get("rightKeyColumn"),
-            id_column=p.get("idColumn", "id"),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from topnotch_spark.operators.sketch import cms_build, cms_query
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        key = F.coalesce(F.col(self.key_column).cast("string"), F.lit(""))
-        if self.method == "joinSize":
-            from topnotch_spark.operators.sketch import cms_join_size
-
-            right = load_input(engine.spark, self.right_input, engine.registry)
-            rkey = F.coalesce(
-                F.col(self.right_key_column).cast("string"), F.lit("")
-            )
-            return cms_join_size(df, key, right, rkey, **self.options)
-        if self.method == "build":
-            return cms_build(df, key, **self.options)
-        if self.sketch_input is None:
-            raise ValueError(
-                'cms: method "query" requires a "sketch" input '
-                "(the built cell table)"
-            )
-        sk = load_input(engine.spark, self.sketch_input, engine.registry)
-        return cms_query(df, self.id_column, key, sk, **self.options)
-
-
-@dataclass(frozen=True)
-class GraphCmd(Command):
-    """{"command": "graph", "input": <input>, "params": {"method":
-    pagerank|ppr|triangles|components|labelProp|kcore, EITHER
-    "srcColumn"+"dstColumn"
-    (input is an
-    undirected unique edge list) OR "basketColumn"+"itemColumn" (edges
-    are built by co-occurrence within a basket; "maxBasketItems" /
-    "minSupport" bound the pair join), pagerank/ppr: ["iters", "scale",
-    "dampNum", "dampDen", "broadcastRanks" — false switches the
-    per-round rank join from the node-sized broadcast to the
-    partitioned equi-join for web-scale node sets, "tolScaled" —
-    delta early-exit with an n_rounds output column],
-    ppr: "seeds" (literal node-id list) +
-    ["weightColumn" — an edge-list input's integer weight column, or
-    "pairCount" to weight built co-occurrence edges], triangles:
-    ["roundDigits"]}} — graph analytics (operators/graph.py):
-    fixed-point PageRank node importance, personalized (seeded,
-    weighted) PageRank related-item walks, ordered-wedge triangle
-    counts, and connected components (min-label propagation with
-    pointer jumping — the same engine the dedup cluster methods use,
-    here over ANY edge list). ``labelProp`` is synchronous
-    label-propagation community detection (weighted votes via
-    "weightColumn", min-label tie-break; ["iters",
-    "broadcastLabels"]) — density communities where components give
-    reachability. ``kcore`` peels nodes of degree < k until stable
-    ({["k", "maxRounds"]}) — the dense-backbone extraction; emits
-    degree / in_kcore / core_degree per node."""
-
-    input: Input = None  # type: ignore[assignment]
-    method: str = "pagerank"
-    src_column: str | None = None
-    dst_column: str | None = None
-    basket_column: str | None = None
-    item_column: str | None = None
-    options: dict = field(default_factory=dict)
-
-    METHODS = (
-        "pagerank", "ppr", "triangles", "components", "labelProp", "kcore",
-    )
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "GraphCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "graph")
-        has_edges = "srcColumn" in p and "dstColumn" in p
-        has_basket = "basketColumn" in p and "itemColumn" in p
-        if not has_edges and not has_basket:
-            raise ValueError(
-                "graph: params need srcColumn+dstColumn (edge-list input) "
-                "or basketColumn+itemColumn (co-occurrence edges)"
-            )
-        if p["method"] == "ppr" and "seeds" not in p:
-            raise ValueError("graph: method 'ppr' requires param 'seeds'")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=p["method"],
-            src_column=p.get("srcColumn"),
-            dst_column=p.get("dstColumn"),
-            basket_column=p.get("basketColumn"),
-            item_column=p.get("itemColumn"),
-            options=_opt(
-                p,
-                "maxBasketItems",
-                "minSupport",
-                "iters",
-                "scale",
-                "dampNum",
-                "dampDen",
-                "roundDigits",
-                "seeds",
-                "weightColumn",
-                "broadcastRanks",
-                "tolScaled",
-                "broadcastLabels",
-                "k",
-                "maxRounds",
-            ),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from topnotch_spark.operators.graph import (
-            cooccurrence_edges,
-            pagerank,
-            triangle_counts,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        o = dict(self.options)
-        weight = o.pop("weight_column", None)
-        if self.src_column is not None:
-            cols = [
-                F.col(self.src_column).alias("src"),
-                F.col(self.dst_column).alias("dst"),
-            ]
-            # On the edge-list path EVERY weightColumn value is a plain
-            # column of the input — including the literal "pairCount",
-            # which is only an alias for the built pair count on the
-            # basket path. Selecting it here (aliased to "w") turns the
-            # former unresolved-column AnalysisException into normal
-            # missing-column validation at select time.
-            if weight is not None:
-                cols.append(F.col(weight).alias("w"))
-                weight = "w"
-            edges = df.select(*cols)
-        else:
-            # NOTE: _opt stores snake_case keys — the r8 version popped
-            # the camelCase spellings here, so plan-set maxBasketItems/
-            # minSupport (and dampNum/dampDen below) silently fell back
-            # to defaults. Regression-tested in test_round9.py.
-            edges = cooccurrence_edges(
-                df,
-                self.basket_column,
-                self.item_column,
-                max_basket_items=o.pop("max_basket_items", 12),
-                min_support=o.pop("min_support", 1),
-            )
-            if weight == "pairCount":
-                weight = "pair_count"
-        o.pop("max_basket_items", None)
-        o.pop("min_support", None)
-        walk_opts = dict(
-            iters=o.get("iters", 8),
-            scale=o.get("scale", 10**12),
-            damp_num=o.get("damp_num", 17),
-            damp_den=o.get("damp_den", 20),
-            broadcast_ranks=o.get("broadcast_ranks", True),
-            tol_scaled=o.get("tol_scaled"),
-        )
-        if self.method == "pagerank":
-            return pagerank(edges, **walk_opts)
-        if self.method == "ppr":
-            from topnotch_spark.operators.graph import personalized_pagerank
-
-            seeds = engine.spark.createDataFrame(
-                [(int(x),) for x in o.pop("seeds")], "node long"
-            )
-            return personalized_pagerank(
-                edges, seeds, weight_col=weight, **walk_opts
-            )
-        if self.method == "kcore":
-            from topnotch_spark.operators.graph import k_core
-
-            return k_core(
-                edges,
-                k=o.get("k", 3),
-                max_rounds=o.get("max_rounds", 8),
-            )
-        if self.method == "labelProp":
-            from topnotch_spark.operators.graph import label_propagation
-
-            return label_propagation(
-                edges,
-                iters=o.get("iters", 5),
-                weight_col=weight,
-                broadcast_labels=o.get("broadcast_labels", True),
-            )
-        if self.method == "components":
-            from topnotch_spark.operators.cluster import connected_components
-
-            return connected_components(edges, src="src", dst="dst").select(
-                "id", F.col("comp").alias("component_id")
-            )
-        return triangle_counts(edges, round_digits=o.get("round_digits", 6))
-
-
-@dataclass(frozen=True)
-class QuantileSketchCmd(Command):
-    """{"command": "quantileSketch", "input": <input>, "params":
-    {"method": build|merge|accuracy|groupJaccard, "idColumn",
-    "valueColumn",
-    ["k", "salt", "qs", "roundDigits", "groupColumn", "textColumn",
-    "gradeExact"]}, ["parts": [<input>, ...]]} —
-    mergeable KMV quantile sketch (operators/sketch.kmv_*). ``build``
-    emits the (value, __h__) bottom-k-by-hash sample (persist it via
-    outputs); ``merge`` re-takes bottom-k over the ``parts`` inputs
-    (exactly equal to a whole-corpus build); ``accuracy`` grades the
-    sketch's quantile estimates against one exact counting pass and
-    emits the per-quantile verdict frame; ``groupJaccard`` estimates
-    pairwise distinct-set union/Jaccard/intersection between the
-    "groupColumn" slices from bottom-k sketches
-    (sketch.kmv_group_jaccard — set "textColumn" to sketch the token
-    vocabulary instead of a value column, "gradeExact" to add the
-    exact-join audit columns)."""
-
-    input: Input | None = None
-    parts: tuple = ()
-    method: str = "build"
-    id_column: str = "id"
-    value_column: str = "value"
-    group_column: str | None = None
-    text_column: str | None = None
-    options: dict = field(default_factory=dict)
-
-    METHODS = ("build", "merge", "accuracy", "groupJaccard")
-
-    @property
-    def inputs(self) -> list[Input]:
-        return ([self.input] if self.input is not None else []) + list(
-            self.parts
-        )
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "QuantileSketchCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "quantileSketch")
-        if p["method"] == "merge":
-            if len(obj.get("parts", ())) < 2:
-                raise ValueError(
-                    'quantileSketch: method "merge" requires a "parts" '
-                    "list of at least 2 sketch inputs"
-                )
-        elif "input" not in obj:
-            raise ValueError(
-                f"quantileSketch method {p['method']!r} requires an "
-                '"input"'
-            )
-        if p["method"] == "groupJaccard":
-            if "groupColumn" not in p:
-                raise ValueError(
-                    'quantileSketch: method "groupJaccard" requires '
-                    'param "groupColumn"'
-                )
-            if "textColumn" not in p and "valueColumn" not in p:
-                raise ValueError(
-                    'quantileSketch: method "groupJaccard" requires '
-                    '"valueColumn" or "textColumn"'
-                )
-            opts = _opt(p, "k", "salt", "roundDigits", "gradeExact")
-        else:
-            opts = _opt(p, "k", "salt", "qs", "roundDigits")
-        return cls(
-            input=(
-                Input.from_json(obj["input"]) if "input" in obj else None
-            ),
-            parts=tuple(
-                Input.from_json(x) for x in obj.get("parts", ())
-            ),
-            method=p["method"],
-            id_column=p.get("idColumn", "id"),
-            value_column=p.get("valueColumn", "value"),
-            group_column=p.get("groupColumn"),
-            text_column=p.get("textColumn"),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.sketch import (
-            kmv_accuracy,
-            kmv_build,
-            kmv_merge,
-        )
-
-        opts = dict(self.options)
-        if "qs" in opts:
-            opts["qs"] = tuple(opts["qs"])
-        if self.method == "merge":
-            frames = [
-                load_input(engine.spark, i, engine.registry)
-                for i in self.parts
-            ]
-            return kmv_merge(frames, **{
-                k: v for k, v in opts.items() if k == "k"
-            })
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "groupJaccard":
-            from pyspark.sql import functions as F
-
-            from topnotch_spark.functions.text import tokens
-            from topnotch_spark.operators.sketch import kmv_group_jaccard
-
-            value_col = self.value_column
-            if self.text_column is not None:
-                value_col = "__v__"
-                df = df.select(
-                    self.group_column,
-                    F.explode(tokens(self.text_column)).alias(value_col),
-                )
-            return kmv_group_jaccard(
-                df, self.group_column, value_col, **opts
-            )
-        fn = kmv_build if self.method == "build" else kmv_accuracy
-        if self.method == "build":
-            opts.pop("qs", None)
-            opts.pop("round_digits", None)
-        return fn(df, self.id_column, self.value_column, **opts)
-
-
-@dataclass(frozen=True)
-class MembershipCmd(Command):
-    """{"command": "bloom", "input": <input>, "params": {"method":
-    build|probe, "keyColumn", ["idColumn", "mBits", "kHashes"]},
-    ["filter": <input>]} — distributed Bloom seen-set. ``build`` emits
-    the (word_idx, word) filter table (persist it via outputs);
-    ``probe`` joins the broadcast ``filter`` input and emits
-    (id, bloom_hit). NULL keys hash as empty strings."""
-
-    input: Input = None  # type: ignore[assignment]
-    filter_input: Input | None = None
-    method: str = "build"
-    key_column: str = "text"
-    id_column: str = "id"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input] + (
-            [self.filter_input] if self.filter_input is not None else []
-        )
-
-    METHODS = ("build", "probe")
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "MembershipCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "bloom")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            filter_input=(
-                Input.from_json(obj["filter"]) if "filter" in obj else None
-            ),
-            method=p["method"],
-            key_column=p["keyColumn"],
-            id_column=p.get("idColumn", "id"),
-            options=_opt(p, "mBits", "kHashes"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from topnotch_spark.operators.membership import (
-            bloom_build,
-            bloom_probe,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        key = F.coalesce(F.col(self.key_column).cast("string"), F.lit(""))
-        if self.method == "build":
-            return bloom_build(df, key, **self.options)
-        if self.method == "probe":
-            if self.filter_input is None:
-                raise ValueError(
-                    'bloom: method "probe" requires a "filter" input '
-                    "(the built filter table)"
-                )
-            bloom = load_input(engine.spark, self.filter_input, engine.registry)
-            return bloom_probe(
-                df, self.id_column, key, bloom, **self.options
-            )
-        raise ValueError(f"unknown bloom method: {self.method}")
-
-
-@dataclass(frozen=True)
-class SpatialJoinCmd(Command):
-    """{"command": "spatialJoin", "left": <input>, "right": <input>,
-    "params": {"radius", ["leftXy": ["x","y"], "rightXy": ["x","y"],
-    "suffixes": ["_l","_r"]]}} — grid-blocked within-radius join
-    (operators/spatial.within_radius_join)."""
-
-    left: Input = None  # type: ignore[assignment]
-    right: Input = None  # type: ignore[assignment]
-    radius: float = 0.0
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.left, self.right]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SpatialJoinCmd":
-        p = obj["params"]
-        opts = {}
-        if "leftXy" in p:
-            opts["left_xy"] = tuple(p["leftXy"])
-        if "rightXy" in p:
-            opts["right_xy"] = tuple(p["rightXy"])
-        if "suffixes" in p:
-            opts["suffixes"] = tuple(p["suffixes"])
-        return cls(
-            left=Input.from_json(obj["left"]),
-            right=Input.from_json(obj["right"]),
-            radius=float(p["radius"]),
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.spatial import within_radius_join
-
-        return within_radius_join(
-            load_input(engine.spark, self.left, engine.registry),
-            load_input(engine.spark, self.right, engine.registry),
-            radius=self.radius,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class SchemaCheckCmd(Command):
-    """{"command": "schemaCheck", "input": <input>, "params":
-    {"columns": [{"name", "type"}], ["allowExtra": true,
-    "failOnViolation": false]}} — schema contract over an input: every
-    expected column must exist with the expected Spark ``simpleString``
-    type (case-insensitive); extra columns violate unless ``allowExtra``.
-    Returns one row per expected/extra column with a status
-    (ok | missing | type_mismatch | unexpected); with
-    ``failOnViolation`` the plan halts instead — the metadata
-    counterpart of the reference's static input validation
-    (tnengine/TnPlanValidator.scala checks inputs EXIST; this checks
-    they still look like what the plan was written against).
-
-    Pure metadata: no job runs — the check reads the analyzed schema
-    only, so it is free even on a 100 TB input.
-    """
-
-    input: Input = None  # type: ignore[assignment]
-    columns: tuple[tuple[str, str], ...] = ()
-    allow_extra: bool = True
-    fail_on_violation: bool = False
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SchemaCheckCmd":
-        p = obj["params"]
-        return cls(
-            input=Input.from_json(obj["input"]),
-            columns=tuple((c["name"], c["type"]) for c in p["columns"]),
-            allow_extra=bool(p.get("allowExtra", True)),
-            fail_on_violation=bool(p.get("failOnViolation", False)),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        df = load_input(engine.spark, self.input, engine.registry)
-        actual = {f.name.lower(): f.dataType.simpleString() for f in df.schema.fields}
-        rows: list[tuple[str, str | None, str | None, str]] = []
-        for name, expected in self.columns:
-            got = actual.get(name.lower())
-            if got is None:
-                rows.append((name, expected, None, "missing"))
-            elif got.lower() != expected.lower():
-                rows.append((name, expected, got, "type_mismatch"))
-            else:
-                rows.append((name, expected, got, "ok"))
-        if not self.allow_extra:
-            expected_names = {n.lower() for n, _ in self.columns}
-            for f in df.schema.fields:
-                if f.name.lower() not in expected_names:
-                    rows.append(
-                        (f.name, None, f.dataType.simpleString(), "unexpected")
-                    )
-        bad = [r for r in rows if r[3] != "ok"]
-        if self.fail_on_violation and bad:
-            detail = "; ".join(
-                f"{n}: {st} (expected {e}, got {g})" for n, e, g, st in bad
-            )
-            raise ValueError(f"schemaCheck '{self.output_key}' failed: {detail}")
-        return engine.spark.createDataFrame(
-            rows, "column string, expected_type string, actual_type string, "
-            "status string",
-        )
-
-
-@dataclass(frozen=True)
-class BasketCmd(Command):
-    """{"command": "basket", "input": <input>, "params":
-    {"basketColumn", "itemColumn", ["minSupport", "maxBasketItems",
-    "roundDigits"]}} — market-basket pair co-occurrence + lift
-    (operators/basket.market_basket_pairs)."""
-
-    input: Input = None  # type: ignore[assignment]
-    basket_column: str = ""
-    item_column: str = ""
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "BasketCmd":
-        p = obj["params"]
-        return cls(
-            input=Input.from_json(obj["input"]),
-            basket_column=p["basketColumn"],
-            item_column=p["itemColumn"],
-            options=_opt(p, "minSupport", "maxBasketItems", "roundDigits"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.basket import market_basket_pairs
-
-        return market_basket_pairs(
-            load_input(engine.spark, self.input, engine.registry),
-            basket_col=self.basket_column,
-            item_col=self.item_column,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class KAnonymityCmd(Command):
-    """{"command": "kAnonymity", "input": <input>, "params":
-    {"quasiColumns": [...], ["k", "riskyOnly"]}} — re-identifiable
-    quasi-identifier groups (operators/integrity.k_anonymity). With
-    "sensitiveColumn" (+ optional "l") the audit runs l-DIVERSITY
-    instead: groups whose rows span < l distinct sensitive values
-    (operators/integrity.l_diversity). With "sensitiveColumn" AND "t"
-    it runs T-CLOSENESS: groups whose sensitive-value distribution sits
-    further than t (variational distance) from the table-wide one
-    (operators/integrity.t_closeness) — "l" and "t" are mutually
-    exclusive."""
-
-    input: Input = None  # type: ignore[assignment]
-    quasi_columns: tuple[str, ...] = ()
-    sensitive_column: str | None = None
-    mode: str = "k"
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "KAnonymityCmd":
-        p = obj["params"]
-        sensitive = p.get("sensitiveColumn")
-        if "t" in p and not sensitive:
-            raise ValueError(
-                "kAnonymity: param 't' (t-closeness) requires "
-                "'sensitiveColumn'"
-            )
-        if "t" in p and "l" in p:
-            raise ValueError(
-                "kAnonymity: params 't' and 'l' are mutually exclusive "
-                "(t-closeness vs l-diversity)"
-            )
-        if sensitive and "t" in p:
-            mode, opts = "t", _opt(p, "t", "riskyOnly", "roundDigits")
-        elif sensitive:
-            mode, opts = "l", _opt(p, "l", "riskyOnly")
-        else:
-            mode, opts = "k", _opt(p, "k", "riskyOnly")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            quasi_columns=tuple(p["quasiColumns"]),
-            sensitive_column=sensitive,
-            mode=mode,
-            options=opts,
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.integrity import (
-            k_anonymity,
-            l_diversity,
-            t_closeness,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.mode == "t":
-            return t_closeness(
-                df,
-                quasi_cols=list(self.quasi_columns),
-                sensitive_col=self.sensitive_column,
-                **self.options,
-            )
-        if self.mode == "l":
-            return l_diversity(
-                df,
-                quasi_cols=list(self.quasi_columns),
-                sensitive_col=self.sensitive_column,
-                **self.options,
-            )
-        return k_anonymity(
-            df,
-            quasi_cols=list(self.quasi_columns),
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class ScdCmd(Command):
-    """{"command": "scd2", "current": <input>, "updates": <input>,
-    "params": {"keys": [...], "tracked": [...], "effectiveColumn",
-    ["validFrom", "validTo", "isCurrent", "validate"]}} — SCD2
-    dimension-history merge (operators/scd.scd2_merge)."""
-
-    current: Input = None  # type: ignore[assignment]
-    updates: Input = None  # type: ignore[assignment]
-    keys: tuple[str, ...] = ()
-    tracked: tuple[str, ...] = ()
-    effective_column: str = ""
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.current, self.updates]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "ScdCmd":
-        p = obj["params"]
-        return cls(
-            current=Input.from_json(obj["current"]),
-            updates=Input.from_json(obj["updates"]),
-            keys=tuple(p["keys"]),
-            tracked=tuple(p["tracked"]),
-            effective_column=p["effectiveColumn"],
-            options=_opt(p, "validFrom", "validTo", "isCurrent", "validate"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.scd import scd2_merge
-
-        return scd2_merge(
-            load_input(engine.spark, self.current, engine.registry),
-            load_input(engine.spark, self.updates, engine.registry),
-            keys=list(self.keys),
-            tracked=list(self.tracked),
-            effective_col=self.effective_column,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class SketchCmd(Command):
-    """{"command": "sketch", "input": <input>, "params":
-    {"detailColumns": [...], "rollupColumns": [...], "valueColumn",
-    ["lgK"]}} — mergeable HLL distinct-count rollup
-    (operators/sketch.distinct_rollup): build one sketch per detail
-    cell, union up to the rollup level, estimate. The pre-aggregatable
-    distinct-count pattern — rollups never re-read the raw data."""
-
-    input: Input = None  # type: ignore[assignment]
-    detail_columns: tuple[str, ...] = ()
-    rollup_columns: tuple[str, ...] = ()
-    value_column: str = ""
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "SketchCmd":
-        p = obj["params"]
-        return cls(
-            input=Input.from_json(obj["input"]),
-            detail_columns=tuple(p["detailColumns"]),
-            rollup_columns=tuple(p.get("rollupColumns", [])),
-            value_column=p["valueColumn"],
-            options=_opt(p, "lgK"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.sketch import distinct_rollup
-
-        kwargs = {}
-        if "lg_k" in self.options:
-            kwargs["lg_k"] = self.options["lg_k"]
-        return distinct_rollup(
-            load_input(engine.spark, self.input, engine.registry),
-            detail_cols=list(self.detail_columns),
-            rollup_cols=list(self.rollup_columns),
-            value_col=self.value_column,
-            **kwargs,
-        )
-
-
-@dataclass(frozen=True)
-class CdcApplyCmd(Command):
-    """{"command": "cdcApply", "snapshot": <input>, "changes": <input>,
-    "params": {"keys": [...], "tsColumn", ["opColumn",
-    "tiebreakColumn"]}} — apply an ordered CDC upsert/delete log to a
-    snapshot, latest change per key wins (operators/scd.cdc_apply)."""
-
-    snapshot: Input = None  # type: ignore[assignment]
-    changes: Input = None  # type: ignore[assignment]
-    keys: tuple[str, ...] = ()
-    ts_column: str = ""
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.snapshot, self.changes]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "CdcApplyCmd":
-        p = obj["params"]
-        return cls(
-            snapshot=Input.from_json(obj["snapshot"]),
-            changes=Input.from_json(obj["changes"]),
-            keys=tuple(p["keys"]),
-            ts_column=p["tsColumn"],
-            options=_opt(p, "opColumn", "tiebreakColumn"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.scd import cdc_apply
-
-        opts = dict(self.options)
-        kwargs = {}
-        if "op_column" in opts:
-            kwargs["op_col"] = opts["op_column"]
-        if "tiebreak_column" in opts:
-            kwargs["tiebreak_col"] = opts["tiebreak_column"]
-        return cdc_apply(
-            load_input(engine.spark, self.snapshot, engine.registry),
-            load_input(engine.spark, self.changes, engine.registry),
-            keys=list(self.keys),
-            ts_col=self.ts_column,
-            **kwargs,
-        )
-
-
-@dataclass(frozen=True)
-class IntervalJoinCmd(Command):
-    """{"command": "intervalJoin", "facts": <input>, "ranges": <input>,
-    "params": {"valueColumn", "loColumn", "hiColumn",
-    "rangeColumns": [...], ["on": [...], "chunkWidth",
-    "broadcastRanges"]}} — point-in-interval lookup join
-    (operators/temporal.interval_join)."""
-
-    facts: Input = None  # type: ignore[assignment]
-    ranges: Input = None  # type: ignore[assignment]
-    value_column: str = ""
-    lo_column: str = ""
-    hi_column: str = ""
-    range_columns: tuple[str, ...] = ()
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.facts, self.ranges]
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "IntervalJoinCmd":
-        p = obj["params"]
-        return cls(
-            facts=Input.from_json(obj["facts"]),
-            ranges=Input.from_json(obj["ranges"]),
-            value_column=p["valueColumn"],
-            lo_column=p["loColumn"],
-            hi_column=p["hiColumn"],
-            range_columns=tuple(p["rangeColumns"]),
-            options=_opt(p, "on", "chunkWidth", "broadcastRanges"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.temporal import interval_join
-
-        opts = dict(self.options)
-        if "on" in opts:
-            opts["on"] = list(opts["on"])
-        return interval_join(
-            load_input(engine.spark, self.facts, engine.registry),
-            load_input(engine.spark, self.ranges, engine.registry),
-            value_col=self.value_column,
-            lo_col=self.lo_column,
-            hi_col=self.hi_column,
-            range_cols=list(self.range_columns),
-            **opts,
-        )
-
-
-@dataclass(frozen=True)
-class CompactCmd(Command):
-    """{"command": "compact", "params": {"source", "dest",
-    ["targetFileMB", "outputFormat"]}} — small-file compaction
-    (sources/maintenance.compact_table); returns the one-row stats
-    frame so later commands can assert on it."""
-
-    source: str = ""
-    dest: str = ""
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return []
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "CompactCmd":
-        p = obj["params"]
-        return cls(
-            source=p["source"],
-            dest=p["dest"],
-            options=_opt(p, "targetFileMB", "outputFormat"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.sources.maintenance import compact_table
-
-        opts = dict(self.options)
-        if "target_file_m_b" in opts:  # camelCase MB picks up extra underscore
-            opts["target_file_mb"] = opts.pop("target_file_m_b")
-        return compact_table(
-            engine.spark, self.source, self.dest, **opts
-        )
-
-
-@dataclass(frozen=True)
-class RetrieveCmd(Command):
-    """{"command": "retrieve", "input": <input>, "params": {"queries":
-    [[id, text], ...], ["idColumn", "textColumn", "k", "k1", "b",
-    "maxTokenDf", "persistTf"]}} — BM25 top-k lexical retrieval over a
-    document corpus (retrieval.bm25_topk). ``maxTokenDf`` is the
-    viral-term valve: query terms whose document frequency exceeds it
-    are dropped before the postings join (a stopword query term would
-    otherwise drag ~|corpus| posting rows through the join).
-    ``persistTf`` true/false forces/skips the shared tf-table persist;
-    unset auto-gates on the corpus's input size (small corpora
-    recompute, big ones materialize once)."""
-
-    input: Input = None  # type: ignore[assignment]
-    queries: tuple[tuple[int, str], ...] = ()
-    id_column: str = "doc_id"
-    text_column: str = "text"
-    options: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "RetrieveCmd":
-        p = obj["params"]
-        qs = tuple((int(q[0]), str(q[1])) for q in p["queries"])
-        if not qs:
-            raise ValueError("retrieve: queries must be non-empty")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            queries=qs,
-            id_column=p.get("idColumn", "doc_id"),
-            text_column=p.get("textColumn", "text"),
-            options=_opt(p, "k", "k1", "b", "maxTokenDf", "persistTf"),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.retrieval import bm25_topk
-
-        return bm25_topk(
-            engine.spark,
-            load_input(engine.spark, self.input, engine.registry),
-            list(self.queries),
-            id_col=self.id_column,
-            text_col=self.text_column,
-            **self.options,
-        )
-
-
-@dataclass(frozen=True)
-class IndexCmd(Command):
-    """{"command": "index", "input": <accepted rows>, "params":
-    {"method": buildExact|buildMinhash|buildSemantic|buildPhash|
-    buildAudio|buildVideo|upsertExact|upsertMinhash|upsertSemantic|
-    upsertBitsig|upsertVideo|delete|stats, "idColumn",
-    "textColumn"|"vecColumn" (binary column for the media builds),
-    buildMinhash: numHashes/bands/shingleN, media builds:
-    hashType/grid/bandBits/nFrames/everyN, upsert*/delete/stats:
-    "indexPath" (+"pfxChars"/"bucketChars")}} — the persisted
-    dedup-index LIFECYCLE
-    as plan steps, so repeated-ingestion pipelines chain build → screen
-    (dedup methods incremental/incrementalMinhash/incrementalSemantic)
-    → upsert through the registry:
-
-    - ``buildExact`` → (dup_key, index_id) content-hash index
-      (dedup.build_dedup_index); ``buildMinhash`` → (index_id,
-      band_idx, bucket, sigs) signature index (build_minhash_index);
-      ``buildSemantic`` → (index_id, vec, nrm, centroid_id) member
-      table (build_semantic_index — requires a "centroids" input, e.g.
-      the similarity kmeans output). Persist the frame with
-      outputPath/tableName to carry it across runs.
-    - ``upsertExact`` / ``upsertMinhash`` / ``upsertSemantic`` fold
-      accepted entries into the ON-DISK index at ``indexPath`` via
-      partition-pruned dynamic overwrite (dedup.upsert_dedup_index /
-      upsert_minhash_index / upsert_semantic_index) and return the
-      one-row stats frame (n_*_touched, n_entries_written) for
-      downstream assertions.
-    - ``upsertBitsig`` / ``upsertVideo`` (r13) grow the media-side
-      signature indexes; ``upsertSemantic`` takes an optional
-      "centroids" input to PIN the routing matrix in the index's
-      _tn_meta.json sidecar (re-trained matrices then raise).
-    - ``delete`` (r13) retires ids: the input frame's ``idColumn``
-      values are removed from EVERY partition of the index at
-      ``indexPath`` (dedup.delete_from_index — right-to-be-forgotten /
-      corrected-batch re-ingestion), fully-retired partition dirs
-      dropped.
-    - ``compactFiles`` (r13, indexPath only; maxFilesPerPartition)
-      rewrites ONLY the partitions whose data-file count exceeds the
-      bound, one file per partition (dedup.compact_index) — the
-      maintenance step for the tiny-file buildup ``stats`` flags.
-    - ``stats`` (indexPath only, no row input) audits the on-disk
-      layout: per partition directory (partition, n_rows, n_files,
-      bytes, rows_skew) — the between-rounds health check for hot
-      buckets, tiny-file buildup, or non-uniform layouts
-      (dedup.index_stats)."""
-
-    input: Input = None  # type: ignore[assignment]
-    centroids: Input | None = None
-    method: str = "buildExact"
-    id_column: str = "id"
-    value_column: str = "text"
-    index_path: str | None = None
-    options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return ([self.input] if self.input is not None else []) + (
-            [self.centroids] if self.centroids is not None else []
-        )
-
-    METHODS = (
-        "buildExact", "buildMinhash", "buildSemantic", "buildPhash",
-        "buildAudio", "buildVideo", "upsertExact", "upsertMinhash",
-        "upsertSemantic", "upsertBitsig", "upsertVideo", "delete",
-        "stats", "compactFiles",
-    )
-
-    @classmethod
-    def from_json(cls, obj: dict) -> "IndexCmd":
-        p = obj["params"]
-        _require_method(p, cls.METHODS, "index")
-        if (
-            p["method"].startswith("upsert")
-            or p["method"] in ("stats", "delete", "compactFiles")
-        ) and "indexPath" not in p:
-            raise ValueError(
-                f'index: method "{p["method"]}" requires param "indexPath"'
-            )
-        if p["method"] in ("stats", "compactFiles"):
-            # no row input: both read the on-disk layout directly
-            return cls(
-                input=None,
-                method=p["method"],
-                index_path=p["indexPath"],
-                options=_opt(p, "maxFilesPerPartition"),
-                **cls._common(obj),
-            )
-        if p["method"] == "buildSemantic" and "centroids" not in obj:
-            raise ValueError(
-                'index: method "buildSemantic" requires a "centroids" '
-                "input (centroid_id, centroid)"
-            )
-        return cls(
-            input=Input.from_json(obj["input"]),
-            centroids=(
-                Input.from_json(obj["centroids"])
-                if "centroids" in obj
-                else None
-            ),
-            method=p["method"],
-            id_column=p.get("idColumn", "id"),
-            value_column=p.get(
-                "textColumn", p.get("vecColumn", "text")
-            ),
-            index_path=p.get("indexPath"),
-            options=_opt(
-                p, "numHashes", "bands", "shingleN", "pfxChars",
-                "hashType", "grid", "bandBits", "nFrames", "everyN",
-                "bucketChars",
-            ),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import dedup as D
-        from topnotch_spark.operators import multimodal as M
-
-        if self.method == "stats":
-            return D.index_stats(engine.spark, self.index_path)
-        if self.method == "compactFiles":
-            # listing-driven tiny-file compaction (dedup.compact_index)
-            # — the maintenance step for what "stats" flags
-            return D.compact_index(
-                engine.spark, self.index_path, **self.options
-            )
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "delete":
-            # input = the retired-id frame; idColumn names its column.
-            # Partition-pruned removal across any index layout
-            # (dedup.delete_from_index) — the retirement step.
-            return D.delete_from_index(
-                engine.spark, self.index_path, df,
-                id_col=self.id_column,
-            )
-        if self.method == "buildPhash":
-            return M.build_phash_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "buildAudio":
-            return M.build_audio_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "buildVideo":
-            return M.build_video_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "upsertBitsig":
-            return D.upsert_bitsig_index(
-                engine.spark, self.index_path, df, **self.options
-            )
-        if self.method == "upsertVideo":
-            return D.upsert_video_index(
-                engine.spark, self.index_path, df, **self.options
-            )
-        if self.method == "buildExact":
-            return D.build_dedup_index(
-                df, self.id_column, self.value_column
-            )
-        if self.method == "buildMinhash":
-            return D.build_minhash_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "buildSemantic":
-            cents = load_input(
-                engine.spark, self.centroids, engine.registry
-            )
-            return D.build_semantic_index(
-                df, None, self.id_column, self.value_column,
-                centroids=cents,
-            )
-        if self.method == "upsertExact":
-            return D.upsert_dedup_index(
-                engine.spark, self.index_path, df, **self.options
-            )
-        if self.method == "upsertSemantic":
-            # optional "centroids" input pins the routing matrix in the
-            # index _tn_meta.json sidecar (r13): later upserts with a
-            # re-trained matrix raise, and the incrementalSemantic
-            # screen can route from the on-disk truth
-            cents = (
-                load_input(engine.spark, self.centroids, engine.registry)
-                if self.centroids is not None
-                else None
-            )
-            return D.upsert_semantic_index(
-                engine.spark, self.index_path, df, centroids=cents
-            )
-        return D.upsert_minhash_index(
-            engine.spark, self.index_path, df, **self.options
-        )
 
 
 def register() -> None:
     from topnotch_spark.plans.parser import EXTENSION_COMMANDS
 
-    EXTENSION_COMMANDS.update(
-        {
-            "retrieve": RetrieveCmd.from_json,
-            "fuse": FuseCmd.from_json,
-            "dedup": DedupCmd.from_json,
-            "bloom": MembershipCmd.from_json,
-            "cms": CmsCmd.from_json,
-            "graph": GraphCmd.from_json,
-            "quantileSketch": QuantileSketchCmd.from_json,
-            "text": TextCmd.from_json,
-            "similarity": SimilarityCmd.from_json,
-            "asof": AsofCmd.from_json,
-            "profile": ProfileCmd.from_json,
-            "outliers": OutliersCmd.from_json,
-            "pivot": PivotCmd.from_json,
-            "drift": DriftCmd.from_json,
-            "sample": SampleCmd.from_json,
-            "decontaminate": DeconCmd.from_json,
-            "lmScore": LmScoreCmd.from_json,
-            "dsir": DsirCmd.from_json,
-            "tokenize": TokenizeCmd.from_json,
-            "integrity": IntegrityCmd.from_json,
-            "fdCheck": FdCheckCmd.from_json,
-            "skewProfile": SkewCmd.from_json,
-            "split": SplitCmd.from_json,
-            "sequence": SequenceCmd.from_json,
-            "winsorize": WinsorizeCmd.from_json,
-            "corpusStats": CorpusStatsCmd.from_json,
-            "scd2": ScdCmd.from_json,
-            "cdcApply": CdcApplyCmd.from_json,
-            "sketch": SketchCmd.from_json,
-            "kAnonymity": KAnonymityCmd.from_json,
-            "basket": BasketCmd.from_json,
-            "schemaCheck": SchemaCheckCmd.from_json,
-            "spatialJoin": SpatialJoinCmd.from_json,
-            "intervalJoin": IntervalJoinCmd.from_json,
-            "compact": CompactCmd.from_json,
-            "index": IndexCmd.from_json,
-        }
+    EXTENSION_COMMANDS.update({c: parse_extension for c, _ in TABLE})
+
+
+# ---------------------------------------------------------------------------
+# Adapters: the forms a single operator call cannot express. Each keeps
+# the defaults of the operator it fronts.
+# ---------------------------------------------------------------------------
+
+def _op(name: str):
+    return importlib.import_module(f"topnotch_spark.operators.{name}")
+
+
+def _prebuilt(index: DataFrame, columns: set, build, *args) -> DataFrame:
+    """A screen's "index" input is either the persisted artifact of an
+    earlier run (it carries ``columns``) or the raw snapshot to build it
+    from."""
+    return index if columns <= set(index.columns) else build(index, *args)
+
+
+def _centroid_frame(frame: DataFrame, what: str) -> DataFrame:
+    if not {"centroid_id", "centroid"} <= set(frame.columns):
+        raise ValueError(
+            f"{what} must carry centroid_id/centroid columns (a trained "
+            "centroids frame, e.g. similarity method 'kmeans' output)"
+        )
+    return frame
+
+
+def _nullsafe(column: str):
+    """Sketch key: NULL hashes as the empty string."""
+    from pyspark.sql import functions as F
+
+    return F.coalesce(F.col(column).cast("string"), F.lit(""))
+
+
+def dup_clusters(df: DataFrame, id_col, text_col, num_hashes=16, bands=4,
+                 threshold=0.5, shingle_n=3) -> DataFrame:
+    """MinHash pairs -> connected components: per-doc (cluster_id,
+    cluster_size, keep)."""
+    pairs = _op("dedup").minhash_lsh_dedup(
+        df, id_col, text_col, num_hashes, bands, threshold, shingle_n)
+    return _op("cluster").dup_clusters(pairs)
+
+
+def semantic_dedup(df: DataFrame, id_col, vec_col, n_clusters=16,
+                   threshold=0.9, round_digits=6,
+                   centroids: DataFrame | None = None) -> DataFrame:
+    """SemDeDup; the optional "index" input is a trained centroids frame
+    (e.g. a similarity "kmeans" output)."""
+    if centroids is not None:
+        _centroid_frame(centroids, 'dedup: method "semantic" index input')
+    return _op("dedup").semantic_dedup(
+        df, id_col, vec_col, n_clusters, threshold, round_digits, centroids)
+
+
+def screen_exact(batch: DataFrame, index: DataFrame, id_col,
+                 text_col) -> DataFrame:
+    D = _op("dedup")
+    index = _prebuilt(index, {"dup_key", "index_id"}, D.build_dedup_index,
+                      id_col, text_col)
+    return D.dedup_against_index(batch, index, id_col, text_col)
+
+
+def screen_minhash(batch: DataFrame, index: DataFrame, id_col, text_col,
+                   num_hashes=16, bands=4, threshold=0.5,
+                   shingle_n=3) -> DataFrame:
+    D = _op("dedup")
+    index = _prebuilt(index, {"index_id", "band_idx", "bucket", "sigs"},
+                      D.build_minhash_index, id_col, text_col, num_hashes,
+                      bands, shingle_n)
+    return D.dedup_batch_against_minhash_index(
+        batch, index, id_col, text_col, num_hashes, bands, threshold,
+        shingle_n)
+
+
+def screen_semantic(batch: DataFrame, index: DataFrame, centroids: DataFrame,
+                    id_col, vec_col, threshold=0.9,
+                    round_digits=6) -> DataFrame:
+    D = _op("dedup")
+    index = _prebuilt(index, {"index_id", "vec", "nrm", "centroid_id"},
+                      D.build_semantic_index, None, id_col, vec_col,
+                      centroids)
+    return D.dedup_batch_against_semantic_index(
+        batch, index, centroids, id_col, vec_col, threshold, round_digits)
+
+
+def screen_phash(batch: DataFrame, index: DataFrame, id_col, bin_col,
+                 hash_type="ahash", grid=8, band_bits=16,
+                 max_hamming=3) -> DataFrame:
+    M = _op("multimodal")
+    index = _prebuilt(index, {"index_id", "band_idx", "bucket", "sh"},
+                      M.build_phash_index, id_col, bin_col, hash_type, grid,
+                      band_bits)
+    return M.dedup_batch_against_phash_index(
+        batch, index, id_col, bin_col, hash_type, grid, band_bits,
+        max_hamming)
+
+
+def screen_audio(batch: DataFrame, index: DataFrame, id_col, bin_col,
+                 n_frames=32, band_bits=8, max_hamming=3) -> DataFrame:
+    M = _op("multimodal")
+    index = _prebuilt(index, {"index_id", "band_idx", "bucket", "sh"},
+                      M.build_audio_index, id_col, bin_col, n_frames,
+                      band_bits)
+    return M.dedup_batch_against_audio_index(
+        batch, index, id_col, bin_col, n_frames, band_bits, max_hamming)
+
+
+def screen_video(batch: DataFrame, index: DataFrame, id_col, bin_col,
+                 hash_type="ahash", grid=8, every_n=1, min_match_frac=0.5,
+                 round_digits=6) -> DataFrame:
+    M = _op("multimodal")
+    index = _prebuilt(index, {"index_id", "frame_idx", "sh", "n_hashed"},
+                      M.build_video_index, id_col, bin_col, hash_type, grid,
+                      every_n)
+    return M.dedup_batch_against_video_index(
+        batch, index, id_col, bin_col, hash_type, grid, every_n,
+        min_match_frac, round_digits)
+
+
+def build_semantic_index(df: DataFrame, centroids: DataFrame, id_col,
+                         vec_col) -> DataFrame:
+    return _op("dedup").build_semantic_index(
+        df, None, id_col, vec_col, centroids)
+
+
+def cluster_silhouette(corpus: DataFrame, id_col="vec_id",
+                       vec_col="embedding", n_centroids=16, round_digits=6,
+                       centroids: DataFrame | None = None) -> DataFrame:
+    """Seeded IVF clustering, or the optional trained "centroids" input."""
+    if centroids is not None:
+        _centroid_frame(centroids, "similarity: silhouette 'centroids' input")
+    return _op("similarity").cluster_silhouette(
+        corpus, id_col, vec_col, n_centroids, round_digits, centroids)
+
+
+def kmeans_centroids(corpus: DataFrame, id_col="vec_id", vec_col="embedding",
+                     n_centroids=8, n_rounds=3) -> DataFrame:
+    """The trained (centroid_id, centroid, n_members) frame."""
+    return _op("similarity").kmeans_centroids_exact(
+        corpus, id_col, vec_col, n_centroids, n_rounds)[0]
+
+
+def bloom_build(df: DataFrame, key_column, m_bits=1048576,
+                k_hashes=3) -> DataFrame:
+    return _op("membership").bloom_build(
+        df, _nullsafe(key_column), m_bits, k_hashes)
+
+
+def bloom_probe(df: DataFrame, bloom: DataFrame, key_column, id_col="id",
+                m_bits=1048576, k_hashes=3) -> DataFrame:
+    return _op("membership").bloom_probe(
+        df, id_col, _nullsafe(key_column), bloom, m_bits, k_hashes)
+
+
+def cms_build(df: DataFrame, key_column, width=1024, depth=4) -> DataFrame:
+    return _op("sketch").cms_build(df, _nullsafe(key_column), width, depth)
+
+
+def cms_query(df: DataFrame, cms: DataFrame, key_column, id_col="id",
+              width=1024, depth=4) -> DataFrame:
+    return _op("sketch").cms_query(
+        df, id_col, _nullsafe(key_column), cms, width, depth)
+
+
+def cms_join_size(df: DataFrame, right: DataFrame, key_column,
+                  right_key_column, width=1024, depth=4,
+                  round_digits=6) -> DataFrame:
+    """|input ⋈ right| estimated from both sides' sketches, graded
+    against the exact per-key counts join."""
+    return _op("sketch").cms_join_size(
+        df, _nullsafe(key_column), right, _nullsafe(right_key_column),
+        width, depth, round_digits)
+
+
+def kmv_group_jaccard(df: DataFrame, group_col, value_column=None,
+                      text_column=None, k=256, salt="kmvset",
+                      round_digits=6, grade_exact=False) -> DataFrame:
+    """Pairwise distinct-set Jaccard between groups; ``text_column``
+    sketches each group's token vocabulary instead of a value column."""
+    if text_column is not None:
+        from pyspark.sql import functions as F
+
+        from topnotch_spark.functions.text import tokens
+
+        value_column = "__v__"
+        df = df.select(group_col,
+                       F.explode(tokens(text_column)).alias(value_column))
+    return _op("sketch").kmv_group_jaccard(
+        df, group_col, value_column, k, salt, round_digits, grade_exact)
+
+
+def mutual_information(df: DataFrame, mi_columns,
+                       round_digits=6) -> DataFrame:
+    return _op("drift").mutual_information(
+        df, *mi_columns, round_digits=round_digits)
+
+
+def schema_check(spark, output_key, df: DataFrame, columns,
+                 allow_extra=True, fail_on_violation=False) -> DataFrame:
+    """Schema contract over an input, from its analyzed schema alone (no
+    job runs): every expected {"name", "type"} column must exist with that
+    Spark ``simpleString`` type, case-insensitive; extra columns violate
+    unless ``allow_extra``. One row per column with a status (ok |
+    missing | type_mismatch | unexpected); ``fail_on_violation`` halts
+    the plan instead."""
+    actual = {f.name.lower(): f.dataType.simpleString() for f in df.schema.fields}
+    rows: list[tuple[str, str | None, str | None, str]] = []
+    for col in columns:
+        name, expected = col["name"], col["type"]
+        got = actual.get(name.lower())
+        if got is None:
+            rows.append((name, expected, None, "missing"))
+        elif got.lower() != expected.lower():
+            rows.append((name, expected, got, "type_mismatch"))
+        else:
+            rows.append((name, expected, got, "ok"))
+    if not allow_extra:
+        expected_names = {c["name"].lower() for c in columns}
+        for f in df.schema.fields:
+            if f.name.lower() not in expected_names:
+                rows.append((f.name, None, f.dataType.simpleString(), "unexpected"))
+    bad = [r for r in rows if r[3] != "ok"]
+    if fail_on_violation and bad:
+        detail = "; ".join(
+            f"{n}: {st} (expected {e}, got {g})" for n, e, g, st in bad
+        )
+        raise ValueError(f"schemaCheck '{output_key}' failed: {detail}")
+    return spark.createDataFrame(
+        rows, "column string, expected_type string, actual_type string, "
+        "status string",
     )
+
+
+# graph: every method runs over one edge list, taken from an edge-list
+# input (srcColumn/dstColumn) or built from basket co-occurrence
+# (basketColumn/itemColumn, bounded by maxBasketItems/minSupport).
+
+def _edges(df, src_column, dst_column, basket_column, item_column,
+           max_basket_items, min_support, weight_column=None):
+    """(src, dst[, w]) edges and the name of their weight column."""
+    from pyspark.sql import functions as F
+
+    if src_column is not None:
+        # on an edge list every weightColumn is a plain column, even the
+        # literal "pairCount" the basket path aliases
+        cols = [F.col(src_column).alias("src"), F.col(dst_column).alias("dst")]
+        if weight_column is None:
+            return df.select(*cols), None
+        return df.select(*cols, F.col(weight_column).alias("w")), "w"
+    edges = _op("graph").cooccurrence_edges(
+        df, basket_column, item_column, max_basket_items, min_support)
+    if weight_column == "pairCount":
+        weight_column = "pair_count"
+    return edges, weight_column
+
+
+def pagerank(df: DataFrame, src_column=None, dst_column=None,
+             basket_column=None, item_column=None, max_basket_items=12,
+             min_support=1, iters=8, scale=10**12, damp_num=17, damp_den=20,
+             broadcast_ranks=True, tol_scaled=None) -> DataFrame:
+    edges, _ = _edges(df, src_column, dst_column, basket_column,
+                      item_column, max_basket_items, min_support)
+    return _op("graph").pagerank(
+        edges, iters, scale, damp_num, damp_den, broadcast_ranks, tol_scaled)
+
+
+def personalized_pagerank(spark, df: DataFrame, seeds, src_column=None,
+                          dst_column=None, basket_column=None,
+                          item_column=None, max_basket_items=12,
+                          min_support=1, weight_column=None, iters=8,
+                          scale=10**12, damp_num=17, damp_den=20,
+                          broadcast_ranks=True,
+                          tol_scaled=None) -> DataFrame:
+    """Seeded, optionally weighted related-item walks; ``seeds`` is a
+    literal node-id list."""
+    edges, weight = _edges(df, src_column, dst_column, basket_column,
+                           item_column, max_basket_items, min_support,
+                           weight_column)
+    seed_df = spark.createDataFrame([(int(x),) for x in seeds], "node long")
+    return _op("graph").personalized_pagerank(
+        edges, seed_df, iters, scale, damp_num, damp_den, weight,
+        broadcast_ranks, tol_scaled)
+
+
+def triangle_counts(df: DataFrame, src_column=None, dst_column=None,
+                    basket_column=None, item_column=None,
+                    max_basket_items=12, min_support=1,
+                    round_digits=6) -> DataFrame:
+    edges, _ = _edges(df, src_column, dst_column, basket_column,
+                      item_column, max_basket_items, min_support)
+    return _op("graph").triangle_counts(edges, round_digits)
+
+
+def components(df: DataFrame, src_column=None, dst_column=None,
+               basket_column=None, item_column=None, max_basket_items=12,
+               min_support=1) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    edges, _ = _edges(df, src_column, dst_column, basket_column,
+                      item_column, max_basket_items, min_support)
+    return _op("cluster").connected_components(
+        edges, src="src", dst="dst"
+    ).select("id", F.col("comp").alias("component_id"))
+
+
+def label_propagation(df: DataFrame, src_column=None, dst_column=None,
+                      basket_column=None, item_column=None,
+                      max_basket_items=12, min_support=1,
+                      weight_column=None, iters=5,
+                      broadcast_labels=True) -> DataFrame:
+    edges, weight = _edges(df, src_column, dst_column, basket_column,
+                           item_column, max_basket_items, min_support,
+                           weight_column)
+    return _op("graph").label_propagation(
+        edges, iters, weight, broadcast_labels)
+
+
+def k_core(df: DataFrame, src_column=None, dst_column=None,
+           basket_column=None, item_column=None, max_basket_items=12,
+           min_support=1, k=3, max_rounds=8) -> DataFrame:
+    edges, _ = _edges(df, src_column, dst_column, basket_column,
+                      item_column, max_basket_items, min_support)
+    return _op("graph").k_core(edges, k, max_rounds)
 
 
 register()

@@ -16,6 +16,13 @@ from topnotch_spark.operators.diff import DEFAULT_DIFF_THRESHOLD, DiffParams
 from topnotch_spark.operators.view import ViewParams
 from topnotch_spark.sources.inputs import Input
 
+# Top-level keys every command may carry besides its inputs.
+ENVELOPE_KEYS = frozenset({
+    "command", "params", "externalParamsFile", "outputKey", "cache",
+    "outputPath", "tableName", "outputFormat", "partitionBy", "sortBy",
+    "sortPartitions", "zorderBy", "zorderBits", "bucketBy", "numBuckets",
+})
+
 
 @dataclass(frozen=True)
 class Command:
@@ -34,6 +41,11 @@ class Command:
     zorder_bits: int = 16
     bucket_by: tuple[str, ...] = ()
     num_buckets: int | None = None
+
+    @property
+    def writes(self) -> tuple[str, ...]:
+        """Paths this command writes, which later commands may read."""
+        return (self.output_path,) if self.output_path else ()
 
     @staticmethod
     def _common(obj: dict) -> dict:
@@ -58,6 +70,10 @@ class AssertionCmd(Command):
     input: Input = None  # type: ignore[assignment]
     rules: tuple[AssertionRule, ...] = ()
 
+    @property
+    def inputs(self) -> tuple[Input, ...]:
+        return (self.input,)
+
     @classmethod
     def from_json(cls, obj: dict) -> "AssertionCmd":
         params = obj["params"]
@@ -77,6 +93,10 @@ class DiffCmd(Command):
     input2_name: str = ""
     filter_equal_rows: bool = False
     threshold: float = DEFAULT_DIFF_THRESHOLD
+
+    @property
+    def inputs(self) -> tuple[Input, ...]:
+        return (self.input1, self.input2)
 
     @classmethod
     def from_json(cls, obj: dict) -> "DiffCmd":
